@@ -18,10 +18,19 @@ aggregated delta (dynamic partition overwrite), so a 10-row late batch
 touching 2 days rewrites 2 small files out of years of history — the
 same selective-rewrite discipline as sinks.upsert_by_key.
 
-Spark-first mapping: the delta aggregate is a plain groupBy (partial
-aggregation map-side), the merge is a groupBy over (tiny affected
-slice of V) ∪ (agg ΔB) — never a join against full history — and the
-write is `partitionOverwriteMode=dynamic`.
+Spark-first mapping: the delta aggregate is a plain groupBy collected
+once to the driver — at most one row per touched day — and those rows
+give both the affected keys and the merge input, so nothing is cached
+and the delta is aggregated once. The merge is a groupBy over (the
+partition-pruned slice of V) ∪ (those rows) — never a join against full
+history — and the write is a per-write dynamic partition overwrite
+(sinks.overwrite_partitions_dynamic).
+
+Read path: ``matview_read`` passes the view's fixed schema, so Spark
+infers nothing from parquet footers (no schema job), and the `day=`
+directories are listed on the driver under the session's listing
+threshold (session.py) rather than by a one-task-per-directory Spark
+job. The only jobs a view read schedules are the ones that scan rows.
 
 Counter-positioning: a naive "recompute the view" costs a full history
 scan per batch; at 100 TB × daily batches that's the difference between
@@ -38,10 +47,17 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparkify_datalake_spark.sources.sinks import (
+    overwrite_partitions_dynamic,
+    write_partitioned_parquet,
+)
+
 # The rollup schema: one row per (day) with distributive components.
 # AVG intentionally stored as (sum, count) — the only merge-safe form.
 _KEY = "day"
 _COMPONENTS = ("revenue_cents", "n_orders")
+# Written by matview_init; `day` is the partition directory.
+_SCHEMA = "revenue_cents long, n_orders long, day date"
 
 
 def _aggregate(batch: DataFrame) -> DataFrame:
@@ -65,19 +81,13 @@ def _aggregate(batch: DataFrame) -> DataFrame:
 
 def matview_init(spark: SparkSession, base: DataFrame, path: str) -> None:
     """Materialize the rollup from an initial base-table snapshot."""
-    (
-        _aggregate(base)
-        .repartition(_KEY)
-        .write.mode("overwrite")
-        .partitionBy(_KEY)
-        .parquet(path)
-    )
+    write_partitioned_parquet(_aggregate(base), path, [_KEY])
 
 
 def matview_read(spark: SparkSession, path: str) -> DataFrame:
-    df = spark.read.parquet(path)
-    # Partition column comes back typed date; normalize column order.
-    return df.select(_KEY, *_COMPONENTS)
+    # The fixed schema types the `day=` directories as dates and skips
+    # footer inference; normalize column order.
+    return spark.read.schema(_SCHEMA).parquet(path).select(_KEY, *_COMPONENTS)
 
 
 def matview_apply(
@@ -86,47 +96,26 @@ def matview_apply(
     """Absorb a base-table delta batch into the materialized view.
 
     Returns the list of affected partition keys (ISO days) — the unit
-    of rewrite. Plan shape: agg(Δ) is tiny (≤ distinct days in the
-    batch); the prior view is read WITH a partition-pruned filter
-    (`day IN affected`) so history outside the touched days is never
-    scanned; the merged slice overwrites only those directories via
-    dynamic partition overwrite.
+    of rewrite. Plan shape: agg(Δ) is collected once (≤ distinct days in
+    the batch) and re-enters as a local relation; the prior view is read
+    WITH a partition-pruned filter (`day IN affected`) so history outside
+    the touched days is never scanned; the merged slice overwrites only
+    those directories via dynamic partition overwrite.
     """
-    d_agg = _aggregate(delta).cache()
-    affected = [str(r[_KEY]) for r in d_agg.select(_KEY).distinct().collect()]
-    if not affected:
-        d_agg.unpersist()
+    d_rows = _aggregate(delta).collect()
+    if not d_rows:
         return []
+    affected = sorted(str(r[_KEY]) for r in d_rows)
 
     prior = matview_read(spark, path).filter(F.col(_KEY).isin(affected))
+    d_agg = spark.createDataFrame(d_rows, prior.schema)
     merged = (
         prior.unionByName(d_agg)
         .groupBy(_KEY)
-        .agg(
-            F.sum("revenue_cents").alias("revenue_cents"),
-            F.sum("n_orders").alias("n_orders"),
-        )
+        .agg(*[F.sum(c).alias(c) for c in _COMPONENTS])
     )
-    with_dynamic_overwrite(spark, merged, path)
-    d_agg.unpersist()
-    return sorted(affected)
-
-
-def with_dynamic_overwrite(
-    spark: SparkSession, df: DataFrame, path: str
-) -> None:
-    """Write df, overwriting only the partition directories it contains."""
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            df.repartition(_KEY)
-            .write.mode("overwrite")
-            .partitionBy(_KEY)
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    overwrite_partitions_dynamic(merged, path, [_KEY])
+    return affected
 
 
 def partition_files(path: str) -> dict[str, list[tuple[str, int]]]:

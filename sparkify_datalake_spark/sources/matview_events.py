@@ -32,10 +32,13 @@ events table). The apply-side shuffle is one distinct over the delta's
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sparkify_datalake_spark.sources.sinks import (
+    overwrite_partitions_dynamic,
+    write_partitioned_parquet,
+)
 
 
 def _user_days(events: DataFrame) -> DataFrame:
@@ -47,15 +50,9 @@ def _user_days(events: DataFrame) -> DataFrame:
     )
 
 
-def _write(df: DataFrame, path: str, mode: str) -> None:
-    df.repartition("d_key").write.mode(mode).partitionBy("d_key").parquet(
-        path
-    )
-
-
 def dau_store_init(spark: SparkSession, events: DataFrame, path: str) -> None:
     """Materialize the user_days store from an initial events history."""
-    _write(_user_days(events), path, "overwrite")
+    write_partitioned_parquet(_user_days(events), path, ["d_key"])
 
 
 def dau_store_apply(
@@ -75,22 +72,13 @@ def dau_store_apply(
     affected = [r["d_key"] for r in du.select("d_key").distinct().collect()]
     if not affected:
         return []
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
+    prior = (
+        spark.read.parquet(path)
+        .filter(F.col("d_key").isin(affected))
+        .select("d_key", "d", "user_id")
     )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        prior = (
-            spark.read.parquet(path)
-            .filter(F.col("d_key").isin(affected))
-            .select("d_key", "d", "user_id")
-        )
-        merged = prior.unionByName(
-            du.select("d_key", "d", "user_id")
-        ).distinct()
-        _write(merged, path, "overwrite")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    merged = prior.unionByName(du.select("d_key", "d", "user_id")).distinct()
+    overwrite_partitions_dynamic(merged, path, ["d_key"])
     return sorted(affected)
 
 

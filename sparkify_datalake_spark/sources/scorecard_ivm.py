@@ -47,6 +47,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparkify_datalake_spark.sources.sinks import (
+    overwrite_partitions_dynamic,
+    write_partitioned_parquet,
+)
+
 _GRAIN_KEYS = {
     "doc_stats": ["source"],
     "token_counts": ["source", "token"],
@@ -77,21 +82,12 @@ def _grains(docs: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def _write(df: DataFrame, path: str, mode: str) -> None:
-    (
-        df.repartition("source")
-        .write.mode(mode)
-        .partitionBy("source")
-        .parquet(path)
-    )
-
-
 def scorecard_store_init(
     spark: SparkSession, docs: DataFrame, path: str
 ) -> None:
     """Materialize the three grain stores from an initial corpus."""
     for name, df in _grains(docs).items():
-        _write(df, os.path.join(path, name), "overwrite")
+        write_partitioned_parquet(df, os.path.join(path, name), ["source"])
 
 
 def scorecard_store_apply(
@@ -113,29 +109,20 @@ def scorecard_store_apply(
     ]
     if not affected:
         return []
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        for name, d_agg in gs.items():
-            grain_path = os.path.join(path, name)
-            keys, sums = _GRAIN_KEYS[name], _GRAIN_SUMS[name]
-            prior = (
-                spark.read.parquet(grain_path)
-                .filter(F.col("source").isin(affected))
-                .select(*keys, *sums)
-            )
-            merged = (
-                prior.unionByName(d_agg.select(*keys, *sums))
-                .groupBy(*keys)
-                .agg(*[F.sum(c).alias(c) for c in sums])
-            )
-            _write(merged, grain_path, "overwrite")
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev
+    for name, d_agg in gs.items():
+        grain_path = os.path.join(path, name)
+        keys, sums = _GRAIN_KEYS[name], _GRAIN_SUMS[name]
+        prior = (
+            spark.read.parquet(grain_path)
+            .filter(F.col("source").isin(affected))
+            .select(*keys, *sums)
         )
+        merged = (
+            prior.unionByName(d_agg.select(*keys, *sums))
+            .groupBy(*keys)
+            .agg(*[F.sum(c).alias(c) for c in sums])
+        )
+        overwrite_partitions_dynamic(merged, grain_path, ["source"])
     return sorted(affected)
 
 

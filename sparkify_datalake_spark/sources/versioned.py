@@ -101,6 +101,16 @@ def _collect_file_stats(
     return stats
 
 
+def _schema_fields(manifest: dict) -> list[tuple[str, str]]:
+    """(name, type) pairs of the manifest's ``name type, ...`` schema.
+    The type is the last word: a column name may hold spaces
+    (``(k % 2)``), a parquet-writable type's simple string holds none
+    unless a nested field's name does."""
+    return [
+        tuple(f.rsplit(" ", 1)) for f in manifest["schema"].split(", ")
+    ]
+
+
 def _manifest_dir(path: str) -> str:
     return os.path.join(path, "_manifests")
 
@@ -162,19 +172,16 @@ def commit(df: DataFrame, path: str, mode: str = "append") -> int:
 
     Schema evolution: an append whose DataFrame carries NEW columns is
     legal — the manifest records each version's schema (DDL string) and
-    readers merge file schemas, so old files surface the new columns as
-    NULL. Dropping or type-changing an existing column in append mode
-    raises (that is an overwrite/rewrite, as in Delta/Iceberg).
+    readers scan with it, so old files surface the new columns as NULL.
+    Dropping or type-changing an existing column in append mode raises
+    (that is an overwrite/rewrite, as in Delta/Iceberg).
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     prev = latest_version(path)
     version = 0 if prev is None else prev + 1
     if mode == "append" and prev is not None:
-        prev_fields = dict(
-            f.split(" ", 1)
-            for f in _read_manifest(path, prev)["schema"].split(", ")
-        )
+        prev_fields = dict(_schema_fields(_read_manifest(path, prev)))
         new_fields = {f.name: f.dataType.simpleString() for f in df.schema}
         missing = set(prev_fields) - set(new_fields)
         changed = {
@@ -214,6 +221,36 @@ def commit(df: DataFrame, path: str, mode: str = "append") -> int:
     return version
 
 
+def _manifest_at(path: str, version: int | None) -> dict:
+    """The manifest of `version` (default: latest)."""
+    v = latest_version(path) if version is None else version
+    if v is None or not os.path.exists(_manifest_path(path, v)):
+        raise FileNotFoundError(f"no committed version {version} at {path}")
+    return _read_manifest(path, v)
+
+
+def _read_schema(manifest: dict) -> str:
+    """The manifest's schema as a reader DDL, every name back-quoted so
+    that names like ``sum(x)`` or ``(k % 2)`` parse."""
+    return ", ".join(
+        "`{}` {}".format(name.replace("`", "``"), dtype)
+        for name, dtype in _schema_fields(manifest)
+    )
+
+
+def _scan(
+    spark: SparkSession, path: str, manifest: dict, files: list[str]
+) -> DataFrame:
+    """Scan `files` with the schema the manifest records, as Delta
+    readers take theirs from ``metaData``: no footer-inference job runs,
+    columns come in the manifest's order, and files written before an
+    additive schema change surface the newer columns as NULL. An OLD
+    version reads its own, older schema."""
+    return spark.read.schema(_read_schema(manifest)).parquet(
+        *[os.path.join(path, f) for f in files]
+    )
+
+
 def read_version(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
@@ -222,19 +259,12 @@ def read_version(
     Scans exactly the manifest's file list; files from later commits
     (or uncommitted data dirs) are invisible at this version.
     """
-    v = latest_version(path) if version is None else version
-    if v is None or not os.path.exists(_manifest_path(path, v)):
-        raise FileNotFoundError(f"no committed version {version} at {path}")
-    files = _read_manifest(path, v)["files"]
-    if not files:
-        raise FileNotFoundError(f"version {v} at {path} lists no files")
-    # mergeSchema: files written before a column was added lack it;
-    # merging surfaces the union schema with NULLs for old files —
-    # reading an OLD version still yields the old schema because only
-    # that version's files are listed.
-    return spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(path, f) for f in files]
-    )
+    m = _manifest_at(path, version)
+    if not m["files"]:
+        raise FileNotFoundError(
+            f"version {m['version']} at {path} lists no files"
+        )
+    return _scan(spark, path, m, m["files"])
 
 
 def prune_files(
@@ -248,10 +278,7 @@ def prune_files(
     job: the whole point of recording stats AT COMMIT time is that
     time-travel reads skip files from the manifest alone, exactly as
     Delta/Iceberg serve pruned reads from their stats manifests."""
-    v = latest_version(path) if version is None else version
-    if v is None or not os.path.exists(_manifest_path(path, v)):
-        raise FileNotFoundError(f"no committed version {version} at {path}")
-    m = _read_manifest(path, v)
+    m = _manifest_at(path, version)
     stats = m.get("file_stats", {})
     elo, ehi = _enc_bound(lo), _enc_bound(hi)
     keep = []
@@ -278,15 +305,12 @@ def read_version_pruned(
     skipped files' I/O."""
     from pyspark.sql import functions as F
 
-    keep, _all = prune_files(path, col, lo, hi, version)
-    pred = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
+    m = _manifest_at(path, version)
+    keep, _all = prune_files(path, col, lo, hi, m["version"])
     if not keep:
-        return read_version(spark, path, version).filter(F.lit(False))
-    return (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*[os.path.join(path, f) for f in keep])
-        .filter(pred)
-    )
+        return spark.createDataFrame([], _read_schema(m))
+    pred = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
+    return _scan(spark, path, m, keep).filter(pred)
 
 
 def restore(path: str, version: int) -> int:

@@ -108,6 +108,26 @@ def test_append_evolves_schema_additively(spark, tmp_path):
     # time travel to v0 yields the ORIGINAL schema, not the union
     assert V.read_version(spark, t, 0).columns == ["k"]
 
+    # the new column FIRST: readers take the manifest's column order,
+    # not the order the data files' footers happen to merge in
+    t2 = str(tmp_path / "tbl2")
+    V.commit(_df(spark, 0, 3), t2)
+    V.commit(_df(spark, 3, 5).select(F.lit("new").alias("tag"), "k"), t2)
+    latest = V.read_version(spark, t2)
+    manifest_cols = [
+        f.split(" ", 1)[0]
+        for f in V._read_manifest(t2, 1)["schema"].split(", ")
+    ]
+    assert latest.columns == manifest_cols == ["tag", "k"]
+    rows = {r["k"]: r["tag"] for r in latest.collect()}
+    assert rows == {0: None, 1: None, 2: None, 3: "new", 4: "new"}
+    assert V.read_version(spark, t2, 0).columns == ["k"]
+    pruned = V.read_version_pruned(spark, t2, "k", 1, 3)
+    assert pruned.columns == latest.columns
+    assert set(pruned.collect()) == set(
+        latest.where("k BETWEEN 1 AND 3").collect()
+    ) == {("new", 3), (None, 1), (None, 2)}
+
 
 def test_append_rejects_drops_and_type_changes(spark, tmp_path):
     from pyspark.sql import functions as F
@@ -337,3 +357,16 @@ def test_timestamp_stats_prune(spark, tmp_path):
         .count()
     )
     assert n == full > 0
+
+
+def test_read_schema_quotes_column_names(spark, tmp_path):
+    """Readers scan with the manifest's schema, so a column name that is
+    not a plain identifier (an unaliased aggregate's ``sum(k)``) must
+    still read back."""
+    from pyspark.sql import functions as F
+
+    t = str(tmp_path / "tbl")
+    V.commit(_df(spark, 0, 4).groupBy(F.col("k") % 2).agg(F.sum("k")), t)
+    got = V.read_version(spark, t)
+    assert got.columns == ["(k % 2)", "sum(k)"]
+    assert sorted(map(tuple, got.collect())) == [(0, 2), (1, 4)]
