@@ -2506,8 +2506,9 @@ def stat_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("l_quantity")).cast("long").alias("x"),
         F.round(F.col("l_extendedprice") * 100).cast("long").alias("y"),
     )
-    # single parquet file -> 1 input partition; spread the pair kernel
-    # across cores (the dedup_near_exact fix: measured there, 13 s -> 1 s)
+    # single parquet file -> 1 input partition; a broadcast nested-loop
+    # join keeps its left side's partitioning, so without this the
+    # ~1.3M-pair sign/sum stage would run as one task on one core
     s = s.repartition(16)
     a, b = s.alias("a"), s.alias("b")
     pairs = a.join(

@@ -15,6 +15,15 @@ Scale notes (100 TB):
   pairs only within buckets, exact-Jaccard verification on candidates.
   Cost is O(n·tokens) + O(candidate pairs), the standard web-scale dedup
   shape (cf. PAPERS.md similarity-search background).
+- The three all-pairs anchors (``dedup_near_exact``, ``dedup_ngram``,
+  ``dedup_containment``) run on pinned doc_id samples (500, 300, 300
+  docs at every SF). One Arrow kernel (``_pair_overlap_kernel``) takes
+  the whole sample in one task and reads every pair's overlap off one
+  0/1 doc×item matrix product; Spark then forms the ratio from the
+  integer counts. Memory is n×V float32 for n sample docs and V
+  distinct items: n ≤ 500 by the pin, and V is about 12k shingles at
+  sf0.1 (≈14 MB for the 300-doc shingle sample). V grows with the
+  sample's vocabulary, not the corpus, so the bound holds at any SF.
 - ``dedup_simhash`` keeps a 64-bit signature per doc; banding on 16-bit
   chunks finds hamming-≤k neighbors without an all-pairs pass.
 """
@@ -138,6 +147,98 @@ WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
 """
 
 
+def _pair_overlap_kernel(directed: bool = False):
+    """Arrow kernel factory: one partition of (id long, items
+    array<string>) rows, each array holding distinct items → (a, b,
+    inter, n_a, n_b) for every pair of rows sharing at least one item,
+    with inter = |items(a) ∩ items(b)| and n_a, n_b the array sizes.
+    Pairs have a < b; with ``directed`` every ordered pair with a != b
+    is emitted. Ids compare strictly, so a duplicate id never pairs
+    with itself; NULL ids and NULL arrays yield no pairs.
+
+    Method: dictionary-encode the items, set a 0/1 doc×item float32
+    matrix M and read every pair's overlap off one product M·Mᵀ. Each
+    partial sum is an integer ≤ V < 2²⁴, so float32 counts are exact —
+    the same integers as ``size(array_intersect)``. Memory is n×V
+    floats for n rows and V distinct items, so the kernel is only for
+    the pinned all-pairs samples (see the module scale notes). Returned
+    as a nested closure so it pickles by value (foreign-cwd workers
+    can't import this module).
+    """
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        batches = list(batches)
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        t = t.filter(
+            pc.and_(pc.is_valid(t.column(0)), pc.is_valid(t.column(1)))
+        )
+        n = t.num_rows
+        if n < 2:
+            return
+        ids = t.column(0).to_numpy()
+        items = t.column(1).combine_chunks()
+        lens = pc.list_value_length(items).to_numpy().astype(np.int64)
+        codes = pc.dictionary_encode(
+            pc.list_flatten(items), null_encoding="encode"
+        )
+        n_items = len(codes.dictionary)
+        assert n_items < 2**24, "float32 overlap counts would round"
+        m = np.zeros((n, n_items), dtype=np.float32)
+        m[np.repeat(np.arange(n), lens), codes.indices.to_numpy()] = 1.0
+        inter = (m @ m.T).astype(np.int64)
+        if directed:
+            pair = ids[:, None] != ids[None, :]
+        else:
+            pair = ids[:, None] < ids[None, :]
+        ai, bi = np.nonzero(pair & (inter > 0))
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(ids[ai]),
+                pa.array(ids[bi]),
+                pa.array(inter[ai, bi]),
+                pa.array(lens[ai]),
+                pa.array(lens[bi]),
+            ],
+            ["a", "b", "inter", "n_a", "n_b"],
+        )
+
+    return kernel
+
+
+def _overlap_pairs(sets: DataFrame, directed: bool = False) -> DataFrame:
+    """(a, b, inter, n_a, n_b) over an (id, items) frame: the whole
+    sample in one task running _pair_overlap_kernel — no exchange, so
+    one job at any scale factor."""
+    return sets.coalesce(1).mapInArrow(
+        _pair_overlap_kernel(directed),
+        "a long, b long, inter long, n_a long, n_b long",
+    )
+
+
+def _jaccard_pairs(sets: DataFrame, tau: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for a < b with round(jaccard, 6) ≥ tau.
+    |A ∪ B| = n_a + n_b − inter for distinct-item arrays, so this is the
+    same double as size(array_intersect) / size(array_union)."""
+    jac = F.round(
+        F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6
+    )
+    return (
+        _overlap_pairs(sets)
+        .select(
+            F.col("a").alias("doc_a"),
+            F.col("b").alias("doc_b"),
+            jac.alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= tau)
+    )
+
+
 @query("dedup_near_exact", _JACCARD_SQL)
 def dedup_near_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs token-set Jaccard ≥ 0.6 on a bounded doc_id sample.
@@ -145,31 +246,16 @@ def dedup_near_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(sample²); its entire role is to be the exact correctness anchor
     for the LSH path (dedup_near) — all-pairs is never the scale path,
     so the sample is pinned at 500 docs regardless of SF (at sf0.01
-    that is the whole corpus). Spark 4's array_intersect/array_union
-    run ~0.4 ms/row/core (measured), so unbounded all-pairs at sf0.1
-    would be ~12.5M pairs ≈ minutes of compute for a correctness probe.
+    that is the whole corpus). The overlap counts come from one Arrow
+    kernel over the whole sample (_pair_overlap_kernel): one job, one
+    task, no per-pair array_intersect.
     """
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 500)
     toksets = docs.select(
-        "doc_id", F.array_distinct(_tokens()).alias("toks")
+        F.col("doc_id").alias("id"),
+        F.array_distinct(_tokens()).alias("items"),
     )
-    # The broadcast-NL self-join's output partitioning = the left side's.
-    # documents is a single parquet file → 1 partition → the per-pair
-    # jaccard stage would run on one core (measured 13 s vs 1 s).
-    toksets = toksets.repartition(16)
-    a, b = toksets.alias("a"), toksets.alias("b")
-    jac = F.size(F.array_intersect("a.toks", "b.toks")).cast(
-        "double"
-    ) / F.size(F.array_union("a.toks", "b.toks"))
-    return (
-        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(jac, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.6)
-    )
+    return _jaccard_pairs(toksets, 0.6)
 
 
 _N_HASHES = 32
@@ -686,6 +772,24 @@ _NGRAM_SAMPLE = 300
 _NGRAM_TAU = 0.5
 
 
+def _shingle_sets(docs: DataFrame) -> DataFrame:
+    """(id, items): each document's distinct word-3-gram shingles;
+    documents with fewer than three tokens (or NULL text) are dropped."""
+    return (
+        docs.select("doc_id", _tokens().alias("toks"))
+        .filter(F.size("toks") >= 3)
+        .select(
+            F.col("doc_id").alias("id"),
+            F.array_distinct(
+                F.expr(
+                    "transform(sequence(0, size(toks) - 3), "
+                    "i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))"
+                )
+            ).alias("items"),
+        )
+    )
+
+
 @query(
     "dedup_ngram",
     f"""
@@ -713,41 +817,14 @@ def dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     token-set jaccard in dedup_near_exact: two docs with the same words
     in a different order stop being duplicates. Same scale discipline as
     the other exact variant — the all-pairs form exists as a bounded
-    correctness anchor (pinned 300-doc sample); at 100 TB the same
-    shingles feed the MinHash-LSH path (dedup_near) unchanged.
+    correctness anchor (pinned 300-doc sample) whose overlap counts come
+    from the same one-task Arrow kernel; at 100 TB the same shingles
+    feed the MinHash-LSH path (dedup_near) unchanged.
     """
     docs = load(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _NGRAM_SAMPLE
     )
-    toks = _tokens()
-    sh = (
-        docs.select("doc_id", toks.alias("toks"))
-        .filter(F.size("toks") >= 3)
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(0, size(toks) - 3), "
-                    "i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))"
-                )
-            ).alias("shingles"),
-        )
-        # single-file input → parallelize the per-pair jaccard stage
-        .repartition(16)
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    jac = F.size(F.array_intersect("a.shingles", "b.shingles")).cast(
-        "double"
-    ) / F.size(F.array_union("a.shingles", "b.shingles"))
-    return (
-        a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.round(jac, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= _NGRAM_TAU)
-    )
+    return _jaccard_pairs(_shingle_sets(docs), _NGRAM_TAU)
 
 
 @query(
@@ -1131,39 +1208,20 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     every other (measured 144k degenerate pairs at sf0.01), while
     order-sensitive 3-grams only match real shared passages.
     Directional, so (a,b) and (b,a) are distinct facts and both emit.
-    Same bounded-sample anchor role as dedup_near_exact/dedup_ngram; at
-    100 TB the formula rides dedup_near_verified's banded candidates —
-    only the verify expression swaps.
+    Same bounded-sample anchor role as dedup_near_exact/dedup_ngram, on
+    the same kernel in its directed mode (containment = inter / n_a);
+    at 100 TB the formula rides dedup_near_verified's banded candidates
+    — only the verify expression swaps.
     """
     docs = load(spark, sf_dir, "documents").filter(
         F.col("doc_id") < _CONTAINMENT_SAMPLE
     )
-    toks = _tokens()
-    sh = (
-        docs.select("doc_id", toks.alias("toks"))
-        .filter(F.size("toks") >= 3)
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(0, size(toks) - 3), "
-                    "i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))"
-                )
-            ).alias("shingles"),
-        )
-        .repartition(16)
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    cont = F.round(
-        F.size(F.array_intersect("a.shingles", "b.shingles")).cast("double")
-        / F.size("a.shingles"),
-        6,
-    )
+    cont = F.round(F.col("inter") / F.col("n_a"), 6)
     return (
-        a.join(b, F.col("a.doc_id") != F.col("b.doc_id"))
+        _overlap_pairs(_shingle_sets(docs), directed=True)
         .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+            F.col("a").alias("doc_a"),
+            F.col("b").alias("doc_b"),
             cont.alias("containment"),
         )
         .filter(F.col("containment") >= _CONTAINMENT_TAU)

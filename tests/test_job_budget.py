@@ -107,3 +107,25 @@ def test_lake_step_jobs_within_ceiling(spark, sf_dir, tmp_path):
         f"lake step jobs {got} exceed the ceilings {LAKE_STEP_JOBS}: a "
         "listing, schema-inference or re-aggregation job crept back in"
     )
+
+
+# Jobs per action of the three bounded all-pairs dedup anchors: the
+# sample is one coalesce(1) task into an Arrow overlap kernel with no
+# exchange, so the count is structural (the same at every scale factor).
+# A broadcast nested-loop self-join over a repartitioned sample took 3.
+ALL_PAIRS_EXEC_JOBS = 1
+
+
+@pytest.mark.parametrize(
+    "name", ["dedup_near_exact", "dedup_ngram", "dedup_containment"]
+)
+def test_all_pairs_anchor_runs_one_job(spark, sf_dir, name):
+    q = queries()[name]
+    q(spark, sf_dir).collect()  # warm: relation cache, Python workers
+    df = q(spark, sf_dir)
+    ran = _jobs(spark, df.collect)
+    assert ran <= ALL_PAIRS_EXEC_JOBS, (
+        f"{name} runs {ran} jobs per action; the one-task overlap "
+        f"kernel needs {ALL_PAIRS_EXEC_JOBS} — an exchange or a "
+        "broadcast join crept back in"
+    )

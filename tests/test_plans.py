@@ -447,6 +447,18 @@ def test_ewma_fold_stays_in_codegen(spark):
     assert "Window" in plan
 
 
+@pytest.mark.parametrize(
+    "name", ["dedup_near_exact", "dedup_ngram", "dedup_containment"]
+)
+def test_all_pairs_anchors_are_one_arrow_kernel(spark, name):
+    # the bounded all-pairs samples go through one coalesced Arrow
+    # overlap kernel: no nested-loop self-join, no exchange
+    plan = _plan(spark, name)
+    assert "MapInArrow" in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+    assert "Exchange" not in plan
+
+
 def test_band_lookup_broadcasts_intervals(spark):
     # the pure range join must broadcast the 10-row band table and keep
     # the fact map-side: BroadcastNestedLoopJoin, never a sort-merge

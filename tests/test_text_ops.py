@@ -149,6 +149,114 @@ def test_minhash_kernel_matches_hof(spark, sf_dir):
     assert got == want
 
 
+# Hand-built (id, items) rows for the pair-overlap kernel: a NULL array,
+# an empty array, one-item arrays, the empty-string token, unsorted
+# non-contiguous ids and a duplicate id (5).
+_OVERLAP_ROWS = [
+    (5, ["a", "b", "c"]),
+    (2, ["b", "c"]),
+    (9, None),
+    (7, [""]),
+    (3, ["a"]),
+    (11, ["", "c", "z"]),
+    (5, ["c", "d"]),
+    (100, []),
+    (8, ["q"]),
+    (40, ["d", "", "a", "b"]),
+]
+
+
+@pytest.mark.parametrize("directed", [False, True])
+def test_pair_overlap_kernel_matches_array_intersect(spark, directed):
+    """The all-pairs anchors' Arrow kernel must give, for every pair
+    sharing an item, inter = size(array_intersect), n_a = size(a) and
+    n_b = size(b) — the integers the former per-pair expressions
+    computed. Pairs compare ids strictly (a < b, or a != b directed), so
+    the duplicate id never pairs with itself. The input is spread over
+    several partitions and 2-row Arrow batches before coalesce(1).
+    """
+    from pyspark.sql import functions as F
+
+    from sparkify_datalake_spark.operators.text import _overlap_pairs
+
+    sets = spark.createDataFrame(
+        _OVERLAP_ROWS, "id long, items array<string>"
+    ).repartition(3)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        got = sorted(
+            tuple(r) for r in _overlap_pairs(sets, directed).collect()
+        )
+    finally:
+        spark.conf.set(key, old)
+
+    a, b = sets.alias("a"), sets.alias("b")
+    cmp = F.col("a.id") != F.col("b.id") if directed else (
+        F.col("a.id") < F.col("b.id")
+    )
+    inter = F.size(F.array_intersect("a.items", "b.items"))
+    want = sorted(
+        tuple(r)
+        for r in a.join(b, cmp)
+        .where(inter > 0)
+        .select(
+            "a.id",
+            "b.id",
+            inter.cast("long"),
+            F.size("a.items").cast("long"),
+            F.size("b.items").cast("long"),
+        )
+        .collect()
+    )
+    assert got == want
+    assert (5, 5) not in {(x[0], x[1]) for x in got}
+    assert any(x[0] == 7 or x[1] == 7 for x in got)  # the "" token pairs
+
+
+def test_pair_overlap_kernel_under_two_rows_is_empty(spark):
+    """Zero or one valid row gives no pairs, as a frame of the declared
+    schema."""
+    from sparkify_datalake_spark.operators.text import _overlap_pairs
+
+    declared = "struct<a:bigint,b:bigint,inter:bigint,n_a:bigint,n_b:bigint>"
+    for rows in ([], [(1, ["a"])], [(1, ["a"]), (2, None)]):
+        sets = spark.createDataFrame(rows, "id long, items array<string>")
+        for directed in (False, True):
+            out = _overlap_pairs(sets, directed)
+            assert out.schema.simpleString() == declared
+            assert out.collect() == []
+
+
+def test_tf_grain_follows_rewritten_documents(spark, sf_dir, tmp_path):
+    """The shared token grain is keyed by the documents snapshot: a
+    documents.parquet rewritten at the same path (half the rows) must
+    rebuild the grain, not serve the old one."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from sparkify_datalake_spark.operators.corpus_grain import (
+        whitespace_tf_grain,
+    )
+
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(docs, path)
+
+    def n_docs():
+        return (
+            whitespace_tf_grain(spark, str(tmp_path))
+            .agg(F.countDistinct("doc_id"))
+            .first()[0]
+        )
+
+    full = n_docs()
+    assert full == docs.num_rows
+    pq.write_table(docs.slice(0, docs.num_rows // 2), path)
+    assert n_docs() == docs.num_rows // 2
+
+
 def test_simhash_kernel_matches_explode_formula(spark, sf_dir):
     """dedup_simhash's Arrow popcount kernel must reproduce the
     original explode-by-64 signature definition exactly: bit b is set
