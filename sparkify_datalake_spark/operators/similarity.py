@@ -30,17 +30,25 @@ from pyspark.sql import functions as F
 
 from sparkify_datalake_spark.registry import query
 from sparkify_datalake_spark.sources.load import corpus_fingerprint, load
+from sparkify_datalake_spark.sources.sinks import recover_dir, replace_dir
 
 _DIM = 64
 
 # Persisted ANN index root. Lives under the engine's (gitignored)
 # warehouse dir, resolved from __file__ so the path is stable no matter
-# what cwd the driver launches Spark from; keyed by corpus path AND a
-# data fingerprint (size+mtime) so regenerating the corpus at the same
-# path invalidates the index instead of silently serving stale answers.
-# On a cluster this is an object-store prefix keyed by the corpus
-# table's snapshot/commit id.
+# what cwd the driver launches Spark from. An index is one directory
+# per (corpus snapshot, kind), keyed by the resolved corpus path, a
+# data fingerprint (size+mtime) — so regenerating the corpus at the
+# same path invalidates the index instead of silently serving stale
+# answers — and _INDEX_LAYOUT. A build publishes the whole kind dir
+# (both of its tables) through sinks.replace_dir, so a kind dir that
+# exists is complete. On a cluster this is an object-store prefix keyed
+# by the corpus table's snapshot/commit id.
 _INDEX_ROOT = Path(__file__).resolve().parents[2] / "spark-warehouse" / "ann_index"
+# bump when the on-disk index layout or its publish protocol changes:
+# older code marked completeness with marker files, so a dir it left
+# half-built exists without being complete and must never be served
+_INDEX_LAYOUT = 2
 
 
 def _index_dir(sf_dir: str, kind: str) -> str:
@@ -48,34 +56,9 @@ def _index_dir(sf_dir: str, kind: str) -> str:
     key = (
         f"{Path(resolved).name}-"
         f"{hashlib.md5(resolved.encode()).hexdigest()[:10]}-"
-        f"{corpus_fingerprint(sf_dir, 'embeddings')}"
+        f"{corpus_fingerprint(sf_dir, 'embeddings')}-L{_INDEX_LAYOUT}"
     )
     return str(_INDEX_ROOT / key / kind)
-
-
-def _table_complete(path: str) -> bool:
-    """A table dir counts as built only if its write committed
-    (_SUCCESS marker) — a half-written dir from a crash is rebuilt."""
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-def _index_ok(kind_dir: str) -> bool:
-    """The whole-index marker, written LAST by a build: both tables of
-    an index are products of ONE training run, so per-table _SUCCESS is
-    not enough — a crash between the two writes would leave one stale
-    table with an intact marker, and the mismatched pair would serve
-    silently-wrong answers."""
-    return os.path.exists(os.path.join(kind_dir, "_INDEX_OK"))
-
-
-def _mark_index_ok(kind_dir: str, building: bool = False) -> None:
-    marker = os.path.join(kind_dir, "_INDEX_OK")
-    if building:  # clear at build start
-        if os.path.exists(marker):
-            os.remove(marker)
-        return
-    os.makedirs(kind_dir, exist_ok=True)
-    open(marker, "w").close()
 
 
 def _dot(a: Column | str, b: Column | str) -> Column:
@@ -652,14 +635,16 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str):
 
 # Build/probe split: a real IVF engine trains the coarse quantizer ONCE
 # (an offline build step), PERSISTS the index, and serves many probes
-# against it. ivf_build writes two tables under the index root:
+# against it. ivf_build publishes two tables in one index dir:
 #   centroids/   (cluster, centroid array<double>)  — k×64 floats, tiny
 #   assignment/  (vec_id, embedding) PARTITIONED BY cluster
 # A probe reads only the nprobe partition directories (partition
 # pruning) — the former shape re-scanned and re-assigned the full raw
 # corpus per probe, paying O(corpus) and never realizing the IVF win.
-# The in-process dict only caches the (tiny) centroid array to skip
-# re-reading the centroid parquet within a session.
+# The in-process dict caches the (tiny) centroid array per index dir
+# (the snapshot key, never the raw sf_dir string — a path repointed at
+# another corpus must not pair one corpus's centroids with another's
+# assignment) to skip re-reading the centroid parquet within a session.
 _IVF_CENTROIDS: dict[str, "object"] = {}
 
 
@@ -670,28 +655,22 @@ def ivf_build(spark: SparkSession, sf_dir: str, force: bool = False):
     build API: call once per corpus, then probe with sim_ivf_topk as
     many times as you like — across sessions and jobs, because the
     index lives on disk; training and assignment rerun only with
-    force=True. The index snapshots the corpus at build time: rebuild
-    (force=True) after the corpus changes, as with any ANN index.
+    force=True, which swaps the rebuilt index in. The index is keyed by
+    the corpus snapshot (_index_dir), so a changed corpus gets its own.
     """
     import numpy as np
 
     kind_dir = _index_dir(sf_dir, "ivf")
     cent_path = os.path.join(kind_dir, "centroids")
     assign_path = os.path.join(kind_dir, "assignment")
-    built = (
-        _index_ok(kind_dir)
-        and _table_complete(cent_path)
-        and _table_complete(assign_path)
-    )
-    if not force and built:
-        if sf_dir not in _IVF_CENTROIDS:
+    if not force and recover_dir(kind_dir):
+        if kind_dir not in _IVF_CENTROIDS:
             rows = spark.read.parquet(cent_path).orderBy("cluster").collect()
-            _IVF_CENTROIDS[sf_dir] = np.stack(
+            _IVF_CENTROIDS[kind_dir] = np.stack(
                 [np.array(r["centroid"], dtype=np.float64) for r in rows]
             )
-        return _IVF_CENTROIDS[sf_dir], assign_path
+        return _IVF_CENTROIDS[kind_dir], assign_path
 
-    _mark_index_ok(kind_dir, building=True)
     cent = _kmeans_centroids(spark, sf_dir)
     c = cent
 
@@ -715,20 +694,22 @@ def ivf_build(spark: SparkSession, sf_dir: str, force: bool = False):
             )
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    (
-        emb.mapInPandas(
-            assign, "vec_id long, cluster int, embedding array<float>"
+
+    def write(staging: str) -> None:
+        (
+            emb.mapInPandas(
+                assign, "vec_id long, cluster int, embedding array<float>"
+            )
+            .write.partitionBy("cluster")
+            .parquet(os.path.join(staging, "assignment"))
         )
-        .write.mode("overwrite")
-        .partitionBy("cluster")
-        .parquet(assign_path)
-    )
-    spark.createDataFrame(
-        [(i, [float(v) for v in cent[i]]) for i in range(len(cent))],
-        "cluster int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(cent_path)
-    _mark_index_ok(kind_dir)  # both tables committed — flip the marker
-    _IVF_CENTROIDS[sf_dir] = cent
+        spark.createDataFrame(
+            [(i, [float(v) for v in cent[i]]) for i in range(len(cent))],
+            "cluster int, centroid array<double>",
+        ).coalesce(1).write.parquet(os.path.join(staging, "centroids"))
+
+    replace_dir(kind_dir, write)
+    _IVF_CENTROIDS[kind_dir] = cent
     return cent, assign_path
 
 
@@ -849,14 +830,15 @@ _PQ_RERANK = 500   # ADC candidates re-ranked exactly. With the m=16
                    # O(pool), not O(corpus). History: m=8 needed 2000
                    # and still only reached 0.8 — the m dial, not the
                    # pool dial, is what buys recall.
+# codebooks cached per index dir, as _IVF_CENTROIDS
 _PQ_CODEBOOKS: dict[str, "object"] = {}
 
 
 def pq_build(spark: SparkSession, sf_dir: str, force: bool = False):
     """Build (or load) the persisted PQ index for a corpus.
 
-    Returns ``(codebooks ndarray, codes_table_path)``. Two artifacts
-    under the index root:
+    Returns ``(codebooks ndarray, codes_table_path)``. Two tables in one
+    index dir, published together (see ivf_build):
       codebooks/  (m, k, centroid array<double>) — _PQ_M×_PQ_K rows
       codes/      (vec_id, codes array<smallint>) — M small ids/vector
     Codebooks train driver-side on a fixed deterministic sample
@@ -869,7 +851,7 @@ def pq_build(spark: SparkSession, sf_dir: str, force: bool = False):
     instead of 256 bytes of floats, and the whole codes table fits in
     cluster memory. Encoding runs ONCE here, in one distributed Arrow
     pass — the former shape re-encoded the raw corpus on every probe.
-    Rebuild (force=True) after the corpus changes.
+    force=True swaps a rebuilt index in.
     """
     import numpy as np
 
@@ -879,13 +861,8 @@ def pq_build(spark: SparkSession, sf_dir: str, force: bool = False):
     kind_dir = _index_dir(sf_dir, f"pq_m{_PQ_M}_k{_PQ_K}_t{_PQ_TRAIN_N}")
     books_path = os.path.join(kind_dir, "codebooks")
     codes_path = os.path.join(kind_dir, "codes")
-    built = (
-        _index_ok(kind_dir)
-        and _table_complete(books_path)
-        and _table_complete(codes_path)
-    )
-    if not force and built:
-        if sf_dir not in _PQ_CODEBOOKS:
+    if not force and recover_dir(kind_dir):
+        if kind_dir not in _PQ_CODEBOOKS:
             rows = spark.read.parquet(books_path).orderBy("m", "k").collect()
             d_sub = len(rows[0]["centroid"])
             books = np.empty((_PQ_M, _PQ_K, d_sub))
@@ -893,10 +870,9 @@ def pq_build(spark: SparkSession, sf_dir: str, force: bool = False):
                 books[r["m"], r["k"]] = np.array(
                     r["centroid"], dtype=np.float64
                 )
-            _PQ_CODEBOOKS[sf_dir] = books
-        return _PQ_CODEBOOKS[sf_dir], codes_path
+            _PQ_CODEBOOKS[kind_dir] = books
+        return _PQ_CODEBOOKS[kind_dir], codes_path
 
-    _mark_index_ok(kind_dir, building=True)
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     sample = np.stack(
         [
@@ -942,21 +918,21 @@ def pq_build(spark: SparkSession, sf_dir: str, force: bool = False):
                 {"vec_id": pdf["vec_id"], "codes": list(codes)}
             )
 
-    (
-        emb.mapInPandas(encode, "vec_id long, codes array<smallint>")
-        .write.mode("overwrite")
-        .parquet(codes_path)
-    )
-    spark.createDataFrame(
-        [
-            (m, k, [float(v) for v in books[m, k]])
-            for m in range(_PQ_M)
-            for k in range(_PQ_K)
-        ],
-        "m int, k int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(books_path)
-    _mark_index_ok(kind_dir)  # both tables committed — flip the marker
-    _PQ_CODEBOOKS[sf_dir] = books
+    def write(staging: str) -> None:
+        emb.mapInPandas(
+            encode, "vec_id long, codes array<smallint>"
+        ).write.parquet(os.path.join(staging, "codes"))
+        spark.createDataFrame(
+            [
+                (m, k, [float(v) for v in books[m, k]])
+                for m in range(_PQ_M)
+                for k in range(_PQ_K)
+            ],
+            "m int, k int, centroid array<double>",
+        ).coalesce(1).write.parquet(os.path.join(staging, "codebooks"))
+
+    replace_dir(kind_dir, write)
+    _PQ_CODEBOOKS[kind_dir] = books
     return books, codes_path
 
 

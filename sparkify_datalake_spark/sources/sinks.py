@@ -225,6 +225,55 @@ def upsert_by_key(
     overwrite_partitions_dynamic(merged, path, partition_cols)
 
 
+def recover_dir(path: str) -> bool:
+    """Undo or finish what an interrupted ``replace_dir`` left beside
+    ``path``; returns whether a complete ``path`` exists afterwards.
+
+    The states its steps can leave, and their repair:
+    ``.old`` without ``path`` (crash between the two renames) — restore
+    ``.old``; ``.old`` beside ``path`` (crash before ``.old`` was
+    deleted, the new copy already in place) — delete ``.old``; a
+    ``.staging`` dir (crash before the publishing rename) — discard it.
+    One writer per path: a second writer's live staging dir would be
+    discarded as a leftover.
+    """
+    path = path.rstrip("/")
+    old = path + ".old"
+    if os.path.exists(old):
+        if os.path.exists(path):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, path)
+    shutil.rmtree(path + ".staging", ignore_errors=True)
+    return os.path.isdir(path)
+
+
+def replace_dir(path: str, write) -> None:
+    """Publish a derived directory: ``write(staging)`` fills the sibling
+    ``path + ".staging"``, then renames publish it.
+
+    A new ``path`` is published by ONE ``os.rename`` — that rename is
+    the commit. An existing ``path`` is swapped by two renames (``path``
+    to ``path + ".old"``, staging into ``path``), then ``.old`` is
+    deleted. The swap is not atomic: between the two renames ``path``
+    does not exist, but a complete copy always does, and
+    ``recover_dir`` (run first, on entry) restores it. So a directory
+    at its final path is always complete, and no marker file is needed.
+    os.rename needs a local, same-filesystem path — on an object store
+    the swap becomes a manifest pointer commit (Delta/Iceberg
+    ``OPTIMIZE`` rewrites, docs/DELTA_INTEROP.md).
+    """
+    path = path.rstrip("/")
+    staging, old = path + ".staging", path + ".old"
+    existed = recover_dir(path)
+    write(staging)
+    if existed:
+        os.rename(path, old)
+    os.rename(staging, path)
+    if existed:
+        shutil.rmtree(old)
+
+
 def compact_parquet(
     spark: SparkSession,
     path: str,
@@ -235,50 +284,25 @@ def compact_parquet(
 
     Streaming/incremental ingest leaves thousands of KB-sized files;
     scan throughput dies on open/seek overhead long before bytes matter.
-    Rewrite into a staging directory (repartition to the target file
-    count — or by partition column so each directory compacts to one
-    file per writing task), then swap via two renames: the old table
-    moves aside, the staging dir renames in, the old copy deletes last.
-    The swap is NOT atomic — between the two renames the table path
-    briefly does not exist, so a crash (or a concurrent reader) in that
-    window sees a missing table; what the rename pair guarantees is
-    that a complete copy of the data is always recoverable on disk
-    (the .compact-old dir until the delete, the table itself after).
-    A rerun after a crash first RECOVERS: if the table path is missing,
-    the original data moves back from .compact-old (or, failing that, a
-    fully-committed .compact-staging promotes); only then are leftover
-    .compact-* dirs — now genuinely redundant copies — cleaned up.
-    os.rename requires a local same-filesystem path — on a cluster this
-    whole dance is replaced by the metastore/manifest pointer swap
-    (Delta/Iceberg commit).
+    The rewrite repartitions to the target file count — or by partition
+    column, so each directory compacts to one file per writing task —
+    and publishes through ``replace_dir``, which also recovers from a
+    compaction that crashed mid-swap before this one reads the table.
     """
-    tmp = path.rstrip("/") + ".compact-staging"
-    old = path.rstrip("/") + ".compact-old"
-    if not os.path.exists(path):
-        # mid-swap crash: the leftover dirs hold the ONLY copies —
-        # restore before any cleanup (prefer the untouched original)
-        if os.path.exists(old):
-            os.rename(old, path)
-        elif os.path.exists(
-            os.path.join(tmp, "_SUCCESS")
-        ):
-            os.rename(tmp, path)
-    for stale in (tmp, old):
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
-    df = spark.read.parquet(path)
-    staged = (
-        df.repartition(*partition_cols)
-        if partition_cols
-        else df.repartition(n_files)
-    )
-    writer = staged.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+
+    def write(staging: str) -> None:
+        df = spark.read.parquet(path)
+        staged = (
+            df.repartition(*partition_cols)
+            if partition_cols
+            else df.repartition(n_files)
+        )
+        writer = staged.write.mode("overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(staging)
+
+    replace_dir(path, write)
 
 
 def read_json_permissive(

@@ -176,12 +176,24 @@ def commit(df: DataFrame, path: str, mode: str = "append") -> int:
     Dropping or type-changing an existing column in append mode raises
     (that is an overwrite/rewrite, as in Delta/Iceberg).
     """
+    return _commit_frame(df, path, mode, {})
+
+
+def _commit_frame(df: DataFrame, path: str, mode: str, meta: dict) -> int:
+    """The one write path of ``commit`` and ``commit_stream``: check
+    the schema, write the data files, collect their stats and claim the
+    next version with a manifest that also carries ``meta``."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     prev = latest_version(path)
     version = 0 if prev is None else prev + 1
-    if mode == "append" and prev is not None:
-        prev_fields = dict(_schema_fields(_read_manifest(path, prev)))
+    carried = (
+        _read_manifest(path, prev)
+        if mode == "append" and prev is not None
+        else None
+    )
+    if carried is not None:
+        prev_fields = dict(_schema_fields(carried))
         new_fields = {f.name: f.dataType.simpleString() for f in df.schema}
         missing = set(prev_fields) - set(new_fields)
         changed = {
@@ -201,13 +213,10 @@ def commit(df: DataFrame, path: str, mode: str = "append") -> int:
     new_stats = _collect_file_stats(
         data_dir, data_rel, [f.name for f in df.schema]
     )
-    if mode == "append" and prev is not None:
-        prev_m = _read_manifest(path, prev)
-        files = prev_m["files"] + new_files
-        file_stats = {**prev_m.get("file_stats", {}), **new_stats}
-    else:
-        files = new_files
-        file_stats = new_stats
+    files, file_stats = new_files, new_stats
+    if carried is not None:
+        files = carried["files"] + new_files
+        file_stats = {**carried.get("file_stats", {}), **new_stats}
     schema_ddl = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema
     )
@@ -216,7 +225,7 @@ def commit(df: DataFrame, path: str, mode: str = "append") -> int:
         version,
         {"version": version, "op": mode, "files": files,
          "n_new_files": len(new_files), "schema": schema_ddl,
-         "file_stats": file_stats},
+         "file_stats": file_stats, **meta},
     )
     return version
 
@@ -383,7 +392,9 @@ def commit_stream(
     (same batch_id as the table's last commit) is skipped — together
     that upgrades at-least-once delivery to exactly-once table commits,
     the same idempotent-sink contract Delta's streaming writer
-    implements. Readers meanwhile time-travel per micro-batch.
+    implements. Readers meanwhile time-travel per micro-batch. A batch
+    commits through ``commit``'s own write path, so appends keep the
+    additive-only schema rule.
 
     One writer per table: the replay check consults only the LATEST
     manifest, which is sound for a single streaming query (batch ids
@@ -398,35 +409,7 @@ def commit_stream(
             _read_manifest(path, last).get("batch_id") == batch_id
         ):
             return  # replayed batch after a crash — already committed
-        prev = latest_version(path)
-        version = 0 if prev is None else prev + 1
-        data_rel = f"data/v{version:05d}"
-        data_dir = os.path.join(path, data_rel)
-        _write_data_files(batch_df, data_dir)
-        new_files = [
-            f"{data_rel}/{f}" for f in _list_parquet_files(data_dir)
-        ]
-        new_stats = _collect_file_stats(
-            data_dir, data_rel, [f.name for f in batch_df.schema]
-        )
-        if mode == "append" and prev is not None:
-            prev_m = _read_manifest(path, prev)
-            files = prev_m["files"] + new_files
-            file_stats = {**prev_m.get("file_stats", {}), **new_stats}
-        else:
-            files = new_files
-            file_stats = new_stats
-        schema_ddl = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in batch_df.schema
-        )
-        _commit(
-            path,
-            version,
-            {"version": version, "op": mode, "files": files,
-             "n_new_files": len(new_files), "schema": schema_ddl,
-             "batch_id": batch_id, "file_stats": file_stats},
-        )
+        _commit_frame(batch_df, path, mode, {"batch_id": batch_id})
 
     return (
         df.writeStream.foreachBatch(commit_batch)

@@ -253,35 +253,6 @@ def test_vacuum_shrinks_store_and_preserves_assignments(
     assert stats2["bucket_reps"]["rows_after"] == after["bucket_reps"]
 
 
-def test_vacuum_recovers_from_stale_old_dir(spark, sf_dir, store):
-    """ADVICE r8: a crash between os.rename(tmp, p) and
-    shutil.rmtree(old) leaves `.vacuum-old` WHILE p is complete; the
-    next vacuum must clear the stale dir instead of dying on
-    rename(p, old) — and a crash in the p-missing window must still
-    restore from old (regression guard on both recovery arms)."""
-    import os
-    import shutil as sh
-
-    docs = _docs(spark, sf_dir)
-    inc.dedup_store_build(spark, docs.filter(F.col("doc_id") < 300), store)
-    inc.dedup_store_ingest(spark, docs.filter(F.col("doc_id") >= 300), store)
-
-    p = f"{store}/bucket_reps"
-    # arm 1: stale old beside a complete p (post-swap crash)
-    sh.copytree(p, p + ".vacuum-old")
-    stats = inc.dedup_store_vacuum(spark, store)  # must not raise
-    assert not os.path.exists(p + ".vacuum-old")
-    assert stats["bucket_reps"]["rows_after"] > 0
-
-    # arm 2: p missing, old present (mid-swap crash) → restore
-    os.rename(p, p + ".vacuum-old")
-    stats2 = inc.dedup_store_vacuum(spark, store)
-    assert os.path.exists(p) and not os.path.exists(p + ".vacuum-old")
-    assert stats2["bucket_reps"]["rows_before"] == stats["bucket_reps"][
-        "rows_after"
-    ]
-
-
 def test_streaming_ingest_vacuum_lifecycle(spark, sf_dir, store, tmp_path):
     """The FULL production lifecycle as one pipeline (round-8): build →
     streamed micro-batch ingest → mid-life VACUUM → more streamed

@@ -167,24 +167,6 @@ def test_upsert_detects_partition_moving_key(spark, tmp_path):
         )
 
 
-def test_compact_recovers_from_mid_swap_crash(spark, tmp_path):
-    """A crash between the two swap renames leaves the table path
-    missing and .compact-old holding the only original copy; the rerun
-    must RESTORE it (not delete it as a 'stale' leftover) and then
-    compact normally."""
-    import os
-
-    path = str(tmp_path / "t")
-    _base_df(spark).repartition(6).write.parquet(path)
-    before = _collect(spark, path)
-    # simulate the crash window: old moved aside, new never renamed in
-    os.rename(path, path + ".compact-old")
-    compact_parquet(spark, path, n_files=1)
-    assert _collect(spark, path) == before
-    assert not os.path.exists(path + ".compact-old")
-    assert not os.path.exists(path + ".compact-staging")
-
-
 def test_diff_tables_classifies_changes(spark):
     from pyspark.sql import functions as F
 

@@ -225,6 +225,32 @@ def test_streaming_replayed_batch_is_skipped(spark, tmp_path):
     assert _ids(spark, t) == [0]
 
 
+def test_streamed_append_rejects_dropped_columns(spark, tmp_path):
+    """A micro-batch commits through commit's own path, so a streamed
+    append that drops a column fails the query instead of committing a
+    narrower schema that would hide the column from the latest read."""
+    from pyspark.errors import StreamingQueryException
+
+    t = str(tmp_path / "tbl")
+    src = str(tmp_path / "src")
+    os.makedirs(src, exist_ok=True)
+    V.commit(
+        spark.createDataFrame([(0, "a")], "k long, extra string"), t
+    )
+    spark.createDataFrame([(1,)], "k long").coalesce(1).write.mode(
+        "append"
+    ).parquet(src)
+    stream = spark.readStream.schema("k long").parquet(src)
+    q = V.commit_stream(stream, t, str(tmp_path / "chk"))
+    try:
+        with pytest.raises(StreamingQueryException, match="only ADD"):
+            q.processAllAvailable()
+    finally:
+        q.stop()
+    assert V.latest_version(t) == 0
+    assert V.read_version(spark, t).columns == ["k", "extra"]
+
+
 def test_vacuum_after_restore_keeps_restored_files(spark, tmp_path):
     """restore lists OLD data files in a NEW manifest — vacuum's kept
     horizon must therefore protect them while dropping the overwritten

@@ -55,7 +55,7 @@ def ivf_curve(spark, sf_dir: str) -> dict:
     exact = {
         r["vec_id"] for r in qs["sim_cosine_topk"](spark, sf_dir).collect()
     }
-    _, assign_path = ivf_build(spark, sf_dir)
+    cent, assign_path = ivf_build(spark, sf_dir)
     sizes = {
         r["cluster"]: r["n"]
         for r in spark.read.parquet(assign_path)
@@ -71,11 +71,6 @@ def ivf_curve(spark, sf_dir: str) -> dict:
         # number reflects what the FileIndex actually reads
         import numpy as np
 
-        from sparkify_datalake_spark.operators.similarity import (
-            _IVF_CENTROIDS,
-        )
-
-        cent = _IVF_CENTROIDS[sf_dir]
         from sparkify_datalake_spark.sources.load import load
 
         q = np.array(
