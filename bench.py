@@ -35,9 +35,9 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 def engine_tree_digest() -> str:
     """Content hash of the engine source this bench run measures.
 
-    Stamped into BENCH_FULL_local.json so round_close._fold_windows can
-    REFUSE to fold a window recorded on a different tree (ADVICE r10:
-    a stale fast window would silently lower sealed minima and mask a
+    Stamped into BENCH_FULL_local.json and perfbench's provenance so a
+    recorded timing names the tree it measured: timings from different
+    trees must never be folded together (a stale fast run would mask a
     real regression). Hashes tracked .py content, not git HEAD, so
     uncommitted engine edits change the digest too.
     """
@@ -127,9 +127,8 @@ def main() -> None:
         os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL_local.json"
     )
     with open(full_path, "w") as fh:
-        # Compact sort_keys formatting — identical to round_close's
-        # _remeasure/_fold_windows writes so sealed-artifact bytes don't
-        # depend on which code path last touched the file (ADVICE r10).
+        # Compact sort_keys formatting, so the file's bytes depend only
+        # on its content.
         json.dump(
             {
                 "metric": "total_query_wall_seconds",

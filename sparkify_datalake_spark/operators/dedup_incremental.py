@@ -36,7 +36,6 @@ exactly like compact_parquet.
 
 from __future__ import annotations
 
-import hashlib
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,7 +44,7 @@ from pyspark.sql import functions as F
 from sparkify_datalake_spark.operators.graph import _propagate_min_labels
 from sparkify_datalake_spark.operators.text import minhash_band_buckets
 from sparkify_datalake_spark.registry import query
-from sparkify_datalake_spark.sources.load import corpus_fingerprint, load
+from sparkify_datalake_spark.sources.load import load, snapshot_dir
 from sparkify_datalake_spark.sources.sinks import recover_dir, replace_dir
 
 _STORE_ROOT = (
@@ -57,17 +56,6 @@ _STORE_ROOT = (
 # layout change — a store dir built by older code must never be reused
 # (v2 dirs were marker-checked, so a half-built one may exist on disk)
 _DEMO_STORE_VERSION = 3
-
-
-def _demo_store_dir(sf_dir: str) -> str:
-    resolved = str(Path(sf_dir).resolve())
-    key = (
-        f"{Path(resolved).name}-"
-        f"{hashlib.md5(resolved.encode()).hexdigest()[:10]}"
-        f"-{corpus_fingerprint(sf_dir, 'documents')}"
-        f"-v{_DEMO_STORE_VERSION}"
-    )
-    return str(_STORE_ROOT / key)
 
 
 def dedup_store_build(
@@ -180,7 +168,9 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     never append — deterministic output, steady-state cost = one delta
     ingest.
     """
-    store = _demo_store_dir(sf_dir)
+    store = snapshot_dir(
+        _STORE_ROOT, sf_dir, "documents", f"v{_DEMO_STORE_VERSION}"
+    )
     docs = load(spark, sf_dir, "documents")
     cut = int(
         docs.agg(F.max("doc_id").alias("m")).collect()[0]["m"] * 0.7

@@ -20,7 +20,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import hashlib
 import os
 import random
 from pathlib import Path
@@ -29,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkify_datalake_spark.registry import query
-from sparkify_datalake_spark.sources.load import corpus_fingerprint, load
+from sparkify_datalake_spark.sources.load import load, snapshot_dir
 from sparkify_datalake_spark.sources.sinks import recover_dir, replace_dir
 
 _DIM = 64
@@ -37,10 +36,11 @@ _DIM = 64
 # Persisted ANN index root. Lives under the engine's (gitignored)
 # warehouse dir, resolved from __file__ so the path is stable no matter
 # what cwd the driver launches Spark from. An index is one directory
-# per (corpus snapshot, kind), keyed by the resolved corpus path, a
-# data fingerprint (size+mtime) — so regenerating the corpus at the
-# same path invalidates the index instead of silently serving stale
-# answers — and _INDEX_LAYOUT. A build publishes the whole kind dir
+# per (corpus snapshot, kind), keyed by load.snapshot_dir from the
+# resolved corpus path, a data fingerprint (size+mtime) — so
+# regenerating the corpus at the same path invalidates the index
+# instead of silently serving stale answers, and deletes the superseded
+# one — and _INDEX_LAYOUT. A build publishes the whole kind dir
 # (both of its tables) through sinks.replace_dir, so a kind dir that
 # exists is complete. On a cluster this is an object-store prefix keyed
 # by the corpus table's snapshot/commit id.
@@ -52,13 +52,10 @@ _INDEX_LAYOUT = 2
 
 
 def _index_dir(sf_dir: str, kind: str) -> str:
-    resolved = str(Path(sf_dir).resolve())
-    key = (
-        f"{Path(resolved).name}-"
-        f"{hashlib.md5(resolved.encode()).hexdigest()[:10]}-"
-        f"{corpus_fingerprint(sf_dir, 'embeddings')}-L{_INDEX_LAYOUT}"
+    return os.path.join(
+        snapshot_dir(_INDEX_ROOT, sf_dir, "embeddings", f"L{_INDEX_LAYOUT}"),
+        kind,
     )
-    return str(_INDEX_ROOT / key / kind)
 
 
 def _dot(a: Column | str, b: Column | str) -> Column:

@@ -14,6 +14,8 @@ single-file inputs.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -65,6 +67,38 @@ def corpus_fingerprint(sf_dir: str, name: str) -> str:
     except OSError:
         raw = str(p)
     return hashlib.md5(raw.encode()).hexdigest()[:10]
+
+
+def snapshot_dir(root, sf_dir: str, name: str, version: str) -> str:
+    """Directory of an artifact derived from one fixture table, keyed
+    ``{dir}-{md5(resolved dir)[:10]}-{corpus_fingerprint}-{version}``
+    under ``root``: regenerating the table at the same path, or bumping
+    the artifact's ``version``, gives a new key instead of serving a
+    stale artifact.
+
+    Sibling dirs with the same ``{dir}-{md5}-`` prefix and another
+    suffix are superseded (an older snapshot or layout of the same
+    corpus path) and are deleted here, before a build can publish the
+    new key, so the root keeps one artifact per corpus path. The key's
+    own ``.staging``/``.old`` dirs are left for ``sinks.recover_dir``.
+    """
+    import hashlib
+    import shutil
+    from pathlib import Path
+
+    resolved = Path(sf_dir).resolve()
+    prefix = (
+        f"{resolved.name}-"
+        f"{hashlib.md5(str(resolved).encode()).hexdigest()[:10]}-"
+    )
+    key = f"{prefix}{corpus_fingerprint(sf_dir, name)}-{version}"
+    root = Path(root)
+    if root.is_dir():
+        for old in root.iterdir():
+            own = old.name == key or old.name.startswith(key + ".")
+            if old.name.startswith(prefix) and not own:
+                shutil.rmtree(old, ignore_errors=True)
+    return str(root / key)
 
 
 def table_rows(sf_dir: str, name: str) -> int:
@@ -126,14 +160,19 @@ def scan_width(sf_dir: str, name: str) -> int:
     gate below (hit round 9: the 64× orders file plans 32, delivers
     10, and the md5 ladder ran ~3× slow). Metadata-only; cached per
     corpus fingerprint."""
-    key = ("width", sf_dir.rstrip("/"), name,
-           corpus_fingerprint(sf_dir, name))
-    hit = _WIDTH_CACHE.get(key)
-    if hit is not None:
-        return hit
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    return _row_groups(path, corpus_fingerprint(sf_dir, name))
+
+
+# One entry per (table file, snapshot): a table regenerated at the same
+# path adds an entry, so the cache is bounded by least-recent use.
+@functools.lru_cache(maxsize=256)
+def _row_groups(path: str, fingerprint: str) -> int:
+    """Row groups of the parquet file or directory at ``path``;
+    ``fingerprint`` only keys the cache."""
     from pathlib import Path
 
-    path = Path(sf_dir.rstrip("/")) / f"{name}.parquet"
+    p = Path(path)
     # Metadata failures (missing pyarrow, unreadable footer, odd
     # layout) return 0 = "unknown" rather than a pessimistic 1: a
     # fake width-1 would silently turn the starvation gate into an
@@ -144,21 +183,11 @@ def scan_width(sf_dir: str, name: str) -> int:
     try:
         import pyarrow.parquet as pq
 
-        if path.is_dir():
-            n = sum(
-                pq.ParquetFile(str(f)).metadata.num_row_groups
-                for f in path.glob("*.parquet")
-            )
-        else:
-            n = pq.ParquetFile(str(path)).metadata.num_row_groups
-        n = max(n, 1)
+        files = p.glob("*.parquet") if p.is_dir() else [p]
+        n = sum(pq.ParquetFile(str(f)).metadata.num_row_groups for f in files)
+        return max(n, 1)
     except (ImportError, OSError, ValueError):
-        n = 0
-    _WIDTH_CACHE[key] = n
-    return n
-
-
-_WIDTH_CACHE: dict = {}
+        return 0
 
 
 def column_minmax(sf_dir: str, name: str, col: str):

@@ -1,30 +1,12 @@
-"""Incrementally-maintained materialized aggregate (SURVEY §2-A
-test-class, round 4).
+"""Incrementally-maintained daily revenue rollup (SURVEY §2-A
+test-class), and ``merge_delta``, the one merge every maintained view
+store in the engine calls (this module, ``matview_events.py`` and
+``scorecard_ivm.py``).
 
-The production pattern behind every "daily revenue rollup" table at
-100 TB: the base fact table only ever grows by deltas (a new ingest
-batch, possibly containing LATE rows for old days), and the rollup must
-absorb a delta WITHOUT recomputing history. The classic incremental
-view-maintenance result for distributive aggregates (SUM/COUNT; AVG =
-SUM/COUNT at read time) is that the view delta is just the aggregated
-batch, merged group-wise:
-
-    V' = V  ⊎  agg(ΔB)        (⊎ = per-key sum/count merge)
-
-so maintenance cost is O(|ΔB| + |touched groups|), independent of
-|history|. Implementation detail that makes it lake-safe: the merge
-rewrites ONLY the partition directories whose group keys appear in the
-aggregated delta (dynamic partition overwrite), so a 10-row late batch
-touching 2 days rewrites 2 small files out of years of history — the
-same selective-rewrite discipline as sinks.upsert_by_key.
-
-Spark-first mapping: the delta aggregate is a plain groupBy collected
-once to the driver — at most one row per touched day — and those rows
-give both the affected keys and the merge input, so nothing is cached
-and the delta is aggregated once. The merge is a groupBy over (the
-partition-pruned slice of V) ∪ (those rows) — never a join against full
-history — and the write is a per-write dynamic partition overwrite
-(sinks.overwrite_partitions_dynamic).
+This view's grain is one row per order ``day`` holding distributive
+components (``revenue_cents``, ``n_orders``; AVG = sum/count at read
+time); its merge is a per-key sum, and it is stored ``partitionBy(day)``
+so a late batch touching two days rewrites two small directories.
 
 Read path: ``matview_read`` passes the view's fixed schema, so Spark
 infers nothing from parquet footers (no schema job), and the `day=`
@@ -32,12 +14,9 @@ directories are listed on the driver under the session's listing
 threshold (session.py) rather than by a one-task-per-directory Spark
 job. The only jobs a view read schedules are the ones that scan rows.
 
-Counter-positioning: a naive "recompute the view" costs a full history
-scan per batch; at 100 TB × daily batches that's the difference between
-a 2-minute and a 20-hour maintenance job. tests/test_matview.py proves
-merge-equals-recompute (the IVM correctness property), late-row
-absorption, untouched-partition byte-stability, and O(delta) input
-metrics.
+tests/test_matview.py proves merge-equals-recompute (the IVM
+correctness property), late-row absorption, untouched-partition
+byte-stability, and O(delta) input metrics.
 """
 
 from __future__ import annotations
@@ -90,32 +69,70 @@ def matview_read(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(_SCHEMA).parquet(path).select(_KEY, *_COMPONENTS)
 
 
+def merge_delta(
+    spark: SparkSession,
+    path: str,
+    d_agg: DataFrame,
+    part: str,
+    sums: tuple[str, ...] = (),
+) -> list[str]:
+    """Merge an aggregated delta into the view stored at ``path``,
+    partitioned by ``part``; returns the sorted affected ``part`` values.
+
+    Incremental view maintenance for a grain that absorbs appends: the
+    view delta is the aggregated batch, merged group-wise,
+
+        V' = V  ⊎  agg(ΔB)
+
+    where ⊎ sums the ``sums`` columns per key (distributive aggregates;
+    the key is every other column of ``d_agg``) or, with no ``sums``, is
+    a set union (``distinct``, so a re-delivered row is absorbed).
+    ``d_agg`` carries exactly the view's columns, ``part`` included.
+
+    Only the touched partitions are read and rewritten: agg(ΔB) is
+    collected once and its rows give both the affected ``part`` values
+    and the merge input; the prior slice is read with ``d_agg.schema``
+    (no footer-inference job) and filtered to those partitions; the
+    merge is written by a per-write dynamic partition overwrite
+    (``sinks.overwrite_partitions_dynamic``). A batch costs
+    O(|ΔB| + rows of touched partitions), independent of |history|,
+    where a recompute scans all history per batch: at 100 TB × daily
+    batches, minutes against a day.
+
+    Driver bound: the collect holds |agg(ΔB)| rows per batch, that is
+    one per touched day for the revenue rollup, one per touched
+    (day, user) pair for the DAU store and one per touched
+    (source, token|gram) group for the scorecard (4,986 gram rows for a
+    100-doc delta at sf0.001). A feed whose aggregated batch outgrows
+    the driver must be cut into smaller batches before this merge.
+    """
+    rows = d_agg.collect()
+    if not rows:
+        return []
+    affected = sorted({str(r[part]) for r in rows})
+    prior = (
+        spark.read.schema(d_agg.schema)
+        .parquet(path)
+        .filter(F.col(part).isin(affected))
+        .select(*d_agg.columns)
+    )
+    merged = prior.unionByName(spark.createDataFrame(rows, d_agg.schema))
+    keys = [c for c in d_agg.columns if c not in sums]
+    merged = (
+        merged.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sums])
+        if sums
+        else merged.distinct()
+    )
+    overwrite_partitions_dynamic(merged, path, [part])
+    return affected
+
+
 def matview_apply(
     spark: SparkSession, path: str, delta: DataFrame
 ) -> list[str]:
-    """Absorb a base-table delta batch into the materialized view.
-
-    Returns the list of affected partition keys (ISO days) — the unit
-    of rewrite. Plan shape: agg(Δ) is collected once (≤ distinct days in
-    the batch) and re-enters as a local relation; the prior view is read
-    WITH a partition-pruned filter (`day IN affected`) so history outside
-    the touched days is never scanned; the merged slice overwrites only
-    those directories via dynamic partition overwrite.
-    """
-    d_rows = _aggregate(delta).collect()
-    if not d_rows:
-        return []
-    affected = sorted(str(r[_KEY]) for r in d_rows)
-
-    prior = matview_read(spark, path).filter(F.col(_KEY).isin(affected))
-    d_agg = spark.createDataFrame(d_rows, prior.schema)
-    merged = (
-        prior.unionByName(d_agg)
-        .groupBy(_KEY)
-        .agg(*[F.sum(c).alias(c) for c in _COMPONENTS])
-    )
-    overwrite_partitions_dynamic(merged, path, [_KEY])
-    return affected
+    """Absorb a base-table delta batch into the view; returns the
+    affected ISO days (the unit of rewrite)."""
+    return merge_delta(spark, path, _aggregate(delta), _KEY, _COMPONENTS)
 
 
 def partition_files(path: str) -> dict[str, list[tuple[str, int]]]:

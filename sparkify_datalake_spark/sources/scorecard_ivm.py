@@ -1,43 +1,32 @@
 """Incrementally-maintained corpus quality scorecard (SURVEY §2
-test-class, round 10 — VERDICT r9 #4).
+test-class, VERDICT r9 #4).
 
 `corpus_quality_scorecard` recomputes three full passes over the
-documents table; at 100 TB × daily ingest batches that is the matview
-problem all over again (sources/matview.py): the corpus only ever
-GROWS by append batches, and every scorecard ingredient is a
-distributive count at one of three grains —
+documents table; every scorecard ingredient is a distributive count at
+one of three grains, each stored partitioned by `source`:
 
     doc_stats    (source)         n_docs / total_toks / total_stop / n_pass
     token_counts (source, token)  n
     gram_counts  (source, gram)   n_docs   (doc-distinct per gram)
 
-so the classic IVM result applies unchanged: V' = V ⊎ agg(ΔB), a
-per-key sum merge whose cost is O(|Δ| + touched groups), independent
-of corpus history. The per-source dashboard then RE-FOLDS from the
-maintained grains (TTR and the per-source totals are rollups of
-token_counts; the JS divergence folds over present (source, token)
-rows exactly as the live query does; duplicate-5-gram rates fold
-gram_counts through one gram-keyed window where the live query windows
-the raw (doc, gram) rows — Σ n_docs per gram is the same document
-frequency) — never from the raw documents.
+- Merge: a per-key sum (``matview.merge_delta`` with sums), one call per
+  grain, so an append batch rewrites only the source directories it
+  touches.
+- Dashboard fold: re-folds from the maintained grains, never from the
+  raw documents. TTR and the per-source totals are rollups of
+  token_counts; the JS divergence folds over present (source, token)
+  rows exactly as the live query does; duplicate-5-gram rates fold
+  gram_counts through one gram-keyed window where the live query
+  windows the raw (doc, gram) rows (Σ n_docs per gram is the same
+  document frequency). The grain builders are shared with
+  operators/pipeline.py's live query (_sc_tok_frame/_sc_doc_grain/
+  _sc_token_grain/_sc_gram_pairs/_sc_js/_sc_final), so incremental ==
+  recompute is a property of one set of expressions
+  (tests/test_matview_scorecard.py).
 
-The grain builders are SHARED with operators/pipeline.py's live query
-(_sc_tok_frame/_sc_doc_grain/_sc_token_grain/_sc_gram_pairs/_sc_js/
-_sc_final), so incremental == recompute is a property of one set of
-expressions. Stores are source-partitioned parquet; a delta batch
-rewrites only the source directories it touches (dynamic partition
-overwrite — tests assert untouched partitions byte-stable, the
-matview.py discipline).
-
-At 100 TB the token/gram stores are themselves big (vocab × sources,
-grams × sources) but 10-100× smaller than the raw text and keyed by
-their aggregation keys, so the merge shuffles only the delta's grains;
-hash grams/tokens to 16 bytes first at production scale (the same
-note as the live query).
-
-tests/test_matview_scorecard.py proves: incremental dashboard ==
-corpus_quality_scorecard recompute bit-for-bit after appends, empty
-delta is a no-op, and untouched source partitions stay byte-stable.
+At 100 TB the token/gram stores are vocab × sources and grams × sources:
+10-100× smaller than the raw text, but hash grams/tokens to 16 bytes
+first (the same note as the live query).
 """
 
 from __future__ import annotations
@@ -47,20 +36,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkify_datalake_spark.sources.sinks import (
-    overwrite_partitions_dynamic,
-    write_partitioned_parquet,
-)
+from sparkify_datalake_spark.sources.matview import merge_delta
+from sparkify_datalake_spark.sources.sinks import write_partitioned_parquet
 
-_GRAIN_KEYS = {
-    "doc_stats": ["source"],
-    "token_counts": ["source", "token"],
-    "gram_counts": ["source", "g"],
-}
+# the summed columns of each grain; every other column is its key
 _GRAIN_SUMS = {
-    "doc_stats": ["n_docs", "total_toks", "total_stop", "n_pass"],
-    "token_counts": ["n"],
-    "gram_counts": ["n_docs"],
+    "doc_stats": ("n_docs", "total_toks", "total_stop", "n_pass"),
+    "token_counts": ("n",),
+    "gram_counts": ("n_docs",),
 }
 
 
@@ -95,35 +78,17 @@ def scorecard_store_apply(
 ) -> list[str]:
     """Absorb an APPEND batch of documents; returns touched sources.
 
-    Each grain merges prior ∪ agg(Δ) per key over ONLY the affected
-    source partitions (partition-pruned read — history outside the
-    batch's sources is never scanned), then dynamic-overwrites those
-    directories. Append-only corpus semantics: doc_ids in the delta
-    must be new (the corpus_e2e ingest contract); updates/deletes are
-    CDC territory (cdc_apply_snapshot), not this view.
+    Append-only corpus semantics: doc_ids in the delta must be new (the
+    corpus_e2e ingest contract); updates/deletes are CDC territory
+    (cdc_apply_snapshot), not this view.
     """
-    gs = {k: v.localCheckpoint(eager=False) for k, v in _grains(delta).items()}
-    affected = [
-        r["source"]
-        for r in gs["doc_stats"].select("source").distinct().collect()
-    ]
-    if not affected:
-        return []
-    for name, d_agg in gs.items():
-        grain_path = os.path.join(path, name)
-        keys, sums = _GRAIN_KEYS[name], _GRAIN_SUMS[name]
-        prior = (
-            spark.read.parquet(grain_path)
-            .filter(F.col("source").isin(affected))
-            .select(*keys, *sums)
+    touched = {
+        name: merge_delta(
+            spark, os.path.join(path, name), d_agg, "source", _GRAIN_SUMS[name]
         )
-        merged = (
-            prior.unionByName(d_agg.select(*keys, *sums))
-            .groupBy(*keys)
-            .agg(*[F.sum(c).alias(c) for c in sums])
-        )
-        overwrite_partitions_dynamic(merged, grain_path, ["source"])
-    return sorted(affected)
+        for name, d_agg in _grains(delta).items()
+    }
+    return touched["doc_stats"]
 
 
 def scorecard_store_dashboard(

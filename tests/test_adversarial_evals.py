@@ -26,9 +26,15 @@ sys.path.insert(
 def hard_dir(tmp_path_factory):
     from gen_hard_fixture import write_fixture
 
+    from sparkify_datalake_spark.operators import similarity
+
     d = str(tmp_path_factory.mktemp("hard_corpus"))
     write_fixture(d)
-    return d
+    # the corpus lives under a fresh tmp dir per run, so its ANN indexes
+    # go there too instead of piling up in the shared warehouse
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(similarity, "_INDEX_ROOT", tmp_path_factory.mktemp("ann"))
+        yield d
 
 
 def test_langid_eval_separates_languages(spark, hard_dir):

@@ -129,3 +129,44 @@ def test_all_pairs_anchor_runs_one_job(spark, sf_dir, name):
         f"kernel needs {ALL_PAIRS_EXEC_JOBS} — an exchange or a "
         "broadcast join crept back in"
     )
+
+
+# Jobs per apply call of the DAU and scorecard view stores over a delta
+# that touches old partitions. Each grain is one matview.merge_delta call:
+# one collect of the aggregated delta, a prior-slice read with a known
+# schema and one dynamic overwrite (the scorecard has three grains). A
+# checkpointed delta with a separate affected-key collect and a
+# footer-inferring prior read took 7 (dau) and 16 (scorecard).
+VIEW_STORE_APPLY_JOBS = {"dau": 5, "scorecard": 14}
+
+
+@pytest.mark.parametrize("store", sorted(VIEW_STORE_APPLY_JOBS))
+def test_view_store_apply_jobs_within_ceiling(spark, sf_dir, tmp_path, store):
+    from pyspark.sql import functions as F
+
+    from sparkify_datalake_spark.sources import matview_events, scorecard_ivm
+    from sparkify_datalake_spark.sources.load import load
+
+    path = str(tmp_path / store)
+    if store == "dau":
+        base = load(spark, sf_dir, "events")
+        is_delta = F.col("event_id") % 7 == 0
+        init = matview_events.dau_store_init
+        apply = matview_events.dau_store_apply
+    else:
+        base = load(spark, sf_dir, "documents")
+        sources = sorted(
+            r[0] for r in base.select("source").distinct().collect()
+        )
+        is_delta = F.col("source").isin(sources[:2]) & (
+            F.col("doc_id") % 7 == 0
+        )
+        init = scorecard_ivm.scorecard_store_init
+        apply = scorecard_ivm.scorecard_store_apply
+    init(spark, base.filter(~is_delta), path)
+    ran = _jobs(spark, lambda: apply(spark, path, base.filter(is_delta)))
+    assert ran <= VIEW_STORE_APPLY_JOBS[store], (
+        f"{store} apply runs {ran} jobs; the ceiling is "
+        f"{VIEW_STORE_APPLY_JOBS[store]} — a checkpoint, a separate "
+        "affected-key collect or a footer-schema read crept back in"
+    )

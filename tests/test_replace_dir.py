@@ -255,3 +255,30 @@ def test_ann_cache_follows_repointed_symlink(
     got_b, table = fn(spark, cur)
     assert table == table_b
     assert np.array_equal(got_b, want_b)
+
+
+def test_rebuild_after_rewrite_deletes_superseded_index(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A corpus regenerated at the same path gets a new index key; the
+    build under it deletes the old key's dir and leaves the indexes of
+    other corpus paths alone."""
+    root = tmp_path / "ann_index"
+    monkeypatch.setattr(sim, "_INDEX_ROOT", root)
+    monkeypatch.setattr(sim, "_IVF_CENTROIDS", {})
+    corpus = str(tmp_path / "corpus")
+    os.makedirs(corpus)
+    shutil.copyfile(f"{sf_dir}/embeddings.parquet", f"{corpus}/embeddings.parquet")
+    sim.ivf_build(spark, corpus)
+    old_key = os.path.dirname(sim._index_dir(corpus, "ivf"))
+    other = root / "other-0123456789-0123456789-L2"
+    other.mkdir()
+
+    _negated_corpus(corpus, str(tmp_path / "neg"))
+    os.replace(f"{tmp_path}/neg/embeddings.parquet", f"{corpus}/embeddings.parquet")
+    sim.ivf_build(spark, corpus)
+    new_key = os.path.dirname(sim._index_dir(corpus, "ivf"))
+    assert new_key != old_key
+    assert sorted(os.listdir(root)) == sorted(
+        [os.path.basename(new_key), other.name]
+    )
