@@ -35,7 +35,7 @@ from sparkify_datalake_spark.operators.percentiles import (
     exact_percentiles_multi,
 )
 from sparkify_datalake_spark.registry import query
-from sparkify_datalake_spark.sources.load import load
+from sparkify_datalake_spark.sources.load import load, local_frame
 
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1685,7 +1685,7 @@ def agg_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=False)
     )
-    pairs = spark.createDataFrame(_KMV_PAIRS, ["ta", "tb"])
+    pairs = local_frame(spark, _KMV_PAIRS, "ta string, tb string")
     fof = {t: F.col(f"f{i}") for i, t in enumerate(_KMV_TYPES)}
 
     def pick(side):

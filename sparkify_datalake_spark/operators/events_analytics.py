@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkify_datalake_spark.registry import query
-from sparkify_datalake_spark.sources.load import load
+from sparkify_datalake_spark.sources.load import load, local_frame
 
 @query(
     "events_funnel",
@@ -1839,7 +1839,8 @@ def orders_customer_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("y").alias("max_y"), F.min("y").alias("min_y")
     ).collect()[0]
     if b_row["max_y"] is None:  # no orders: empty matrix
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "y int, from_state string, to_state string, n_customers long",
         )

@@ -28,6 +28,7 @@ from sparkify_datalake_spark.registry import query
 from sparkify_datalake_spark.sources.load import (
     column_minmax,
     load,
+    local_frame,
     scan_width,
     table_rows,
     widen_if_starved,
@@ -152,8 +153,8 @@ def _quantile_bucket_binned(spark: SparkSession, orders: DataFrame) -> DataFrame
         # Empty input: no buckets at all (ADVICE r11 — the >=2M-row
         # gate never routes an empty table here, but the helper is
         # callable directly and next() on an empty iter raised).
-        return spark.createDataFrame(
-            [], "bucket int, n long, lo double, hi double"
+        return local_frame(
+            spark, [], "bucket int, n long, lo double, hi double"
         )
     n = sum(c for _, c in bin_rows)
     small, rem = divmod(n, k)
@@ -197,7 +198,8 @@ def _quantile_bucket_binned(spark: SparkSession, orders: DataFrame) -> DataFrame
         .where(pair_filter)
         .collect()
     }
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [
             (j, size, picked[rank_loc[lo]], picked[rank_loc[hi]])
             for j, lo, hi, size in spans
@@ -2260,7 +2262,8 @@ def stat_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         # None — degrade to an empty result frame (the lazy-plan
         # shape this had before the bounded-collect rewrite) instead
         # of raising TypeError at plan-build time.
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "bin int, n_ref long, n_cur long, "
             "frac_delta double, psi_term double",

@@ -28,7 +28,7 @@ from sparkify_datalake_spark.functions.determinism import (
     unit_sum,
 )
 from sparkify_datalake_spark.registry import query
-from sparkify_datalake_spark.sources.load import load
+from sparkify_datalake_spark.sources.load import load, local_frame
 
 
 @query(
@@ -377,7 +377,8 @@ def join_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     query is hash-checked.
     """
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [("Customer#000000012",), ("Customer#000000145",),
          ("Custoner#000000999",)],
         "probe string",
@@ -753,7 +754,8 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("status_key"),
         "o_totalprice",
     )
-    dim = orders.sparkSession.createDataFrame(
+    dim = local_frame(
+        orders.sparkSession,
         [("O", "open"), ("F", "filled"), (None, "pending")],
         "status_key string, status_name string",
     )

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from sparkify_datalake_spark.functions.determinism import cents_long
 from sparkify_datalake_spark.registry import query
-from sparkify_datalake_spark.sources.load import load
+from sparkify_datalake_spark.sources.load import load, local_frame
 
 
 def _baskets(spark: SparkSession, sf_dir: str, cap: int) -> DataFrame:
@@ -160,7 +160,8 @@ def mine_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "part_a long, part_b long, pair_n long, "
         "n_a long, n_b long, n_orders long"
     )
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(a, b, n, item_n[a], item_n[b], n_orders) for a, b, n in top],
         schema,
     )
@@ -870,7 +871,8 @@ def mine_basket_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_orders = int(
             baskets.agg(F.count(F.lit(1)).alias("n")).collect()[0]["n"]
         )
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(a, b, c, n, n_orders) for a, b, c, n in top],
         "part_a long, part_b long, part_c long, "
         "triple_n long, n_orders long",
@@ -1159,7 +1161,7 @@ def mine_cross_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r10 lesson). Collecting the grain once and re-entering it as a
     # local frame costs one driver round-trip and removes the second
     # full lineitem scan: measured 10.7 -> ~2 s at the 64x probe.
-    weekly = spark.createDataFrame(weekly.collect(), weekly.schema)
+    weekly = spark.createDataFrame(weekly.toArrow(), weekly.schema)
     px = weekly.select(
         F.col("p_type").alias("price_type"),
         "wk",

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkify_datalake_spark.registry import query
-from sparkify_datalake_spark.sources.load import load
+from sparkify_datalake_spark.sources.load import load, local_frame
 
 # First two hex chars of md5(key): 256 equal-probability buckets shared
 # bit-for-bit by Spark and DuckDB (both emit lowercase hex).
@@ -1600,7 +1600,8 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         key=lambda r: r["source"],
     )
     if not g_rows:  # nothing survives the gate: empty plan, no sample
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "source string, n_docs_gated long, n_tokens_gated long, "
             "alpha_share double, sampling_rate double, "
@@ -1649,7 +1650,8 @@ def pipeline_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("docs_split"),
         )
     )
-    plan_df = spark.createDataFrame(
+    plan_df = local_frame(
+        spark,
         [
             (src, int(n), int(tk), float(alpha), float(rate), prob[src])
             for src, n, tk, alpha, rate in plan

@@ -28,7 +28,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sparkify_datalake_spark.registry import query
-from sparkify_datalake_spark.sources.load import load, snapshot_dir
+from sparkify_datalake_spark.sources.load import (
+    load,
+    local_frame,
+    snapshot_dir,
+)
 from sparkify_datalake_spark.sources.sinks import recover_dir, replace_dir
 
 _DIM = 64
@@ -700,7 +704,8 @@ def ivf_build(spark: SparkSession, sf_dir: str, force: bool = False):
             .write.partitionBy("cluster")
             .parquet(os.path.join(staging, "assignment"))
         )
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(i, [float(v) for v in cent[i]]) for i in range(len(cent))],
             "cluster int, centroid array<double>",
         ).coalesce(1).write.parquet(os.path.join(staging, "centroids"))
@@ -734,43 +739,25 @@ def ivf_topk(
     parameterized engine behind sim_ivf_topk, exposed so the
     recall-vs-cost curve (tools/ann_curves.py, 64×-asserted in
     tests/test_scaling.py) can sweep nprobe over the SAME plan the
-    registered query runs."""
+    registered query runs.
+
+    The probed rows are scored with the exact twin's expression
+    (sim_cosine_topk's ``_dot``/``_norm`` over the query vector as a
+    literal array), rounded, ordered and limited the same way, so the
+    probe runs in the JVM with no Python worker, and at nprobe = _IVF_K
+    the result equals sim_cosine_topk row for row."""
     import numpy as np
-    import pandas as pd
 
     cent, _ = ivf_build(spark, sf_dir)
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = np.array(
-        emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"],
-        dtype=np.float64,
-    )
-    probe = np.argsort(((cent - q) ** 2).sum(axis=1))[:nprobe]
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mask = pdf["vec_id"].to_numpy() != 0
-            xs = np.stack(pdf["embedding"].to_numpy()[mask]).astype(
-                np.float64
-            ) if mask.any() else np.empty((0, len(q)))
-            if len(xs) == 0:
-                yield pd.DataFrame({"vec_id": [], "cos_sim": []})
-                continue
-            sims = (xs @ q) / (
-                np.sqrt((xs * xs).sum(axis=1)) * np.sqrt((q * q).sum())
-            )
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy()[mask],
-                    "cos_sim": np.round(sims, 6),
-                }
-            )
-
+    qv = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
+    probe = np.argsort(((cent - np.array(qv)) ** 2).sum(axis=1))[:nprobe]
+    q = F.array(*[F.lit(v) for v in qv])
+    cos = _dot("embedding", q) / (_norm("embedding") * _norm(q))
     return (
         ivf_probe_scan(spark, sf_dir, probe)
-        .select("vec_id", "embedding")
-        .mapInPandas(score, "vec_id long, cos_sim double")
+        .filter(F.col("vec_id") != 0)
+        .select("vec_id", F.round(cos, 6).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(10)
     )
@@ -785,8 +772,10 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     BY cluster assignment once; a probe ranks the centroids against the
     query and scans only the nprobe=3 nearest partitions (partition
     pruning skips the rest — nprobe/k of the corpus, the actual IVF
-    win). Rows-only: recall is probabilistic by design; tests assert
-    overlap with the brute-force twin (sim_cosine_topk), and the
+    win). The probed rows are scored with the brute-force twin's own
+    cosine expression, in the JVM. Rows-only: recall is probabilistic
+    by design; tests assert overlap with the brute-force twin
+    (sim_cosine_topk), and the
     nprobe∈{1,2,4,8} recall-vs-scanned-fraction curve at the 64× probe
     fixture is pinned in tests/test_scaling.py (artifact
     ANN_CURVES_x64.json).
@@ -919,7 +908,8 @@ def pq_build(spark: SparkSession, sf_dir: str, force: bool = False):
         emb.mapInPandas(
             encode, "vec_id long, codes array<smallint>"
         ).write.parquet(os.path.join(staging, "codes"))
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [
                 (m, k, [float(v) for v in books[m, k]])
                 for m in range(_PQ_M)
@@ -1237,7 +1227,7 @@ def embed_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(k), round(float(evals[k] / total), 6))
         for k in range(8)
     ]
-    return spark.createDataFrame(out, "component int, explained_var double")
+    return local_frame(spark, out, "component int, explained_var double")
 
 
 @query(
@@ -1540,7 +1530,8 @@ def sim_knn_label_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("cos_sim").desc(), F.col("nid")
     )
     qlabel_df = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(k, v) for k, v in q_labels.items()], "qid long, qlabel int"
         )
     )

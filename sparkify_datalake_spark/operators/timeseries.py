@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from sparkify_datalake_spark.functions.determinism import cents_long
 from sparkify_datalake_spark.operators.percentiles import exact_percentiles
 from sparkify_datalake_spark.registry import query
-from sparkify_datalake_spark.sources.load import load
+from sparkify_datalake_spark.sources.load import load, local_frame
 
 
 @query(
@@ -844,8 +844,8 @@ def orders_backlog(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("m_open").alias("lo"), F.max("m_after_close").alias("hi")
     ).collect()[0]
     if b["lo"] is None:  # no orders: empty grid, empty result
-        return spark.createDataFrame(
-            [], "month date, n_open long, n_opened long, n_closed long"
+        return local_frame(
+            spark, [], "month date, n_open long, n_opened long, n_closed long"
         )
     # both ±1 deltas ride ONE explode per order (the union form
     # re-derived span once per arm)
@@ -2049,7 +2049,7 @@ def ts_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = hourly.select(
         "x", (F.row_number().over(Window.orderBy("h")) - 1).alias("i")
     )
-    ms = spark.createDataFrame([(8,), (16,), (32,), (64,)], "m int")
+    ms = local_frame(spark, [(8,), (16,), (32,), (64,)], "m int")
     blk = idx.crossJoin(F.broadcast(ms)).select(
         "m", (F.col("i") / F.col("m")).cast("long").alias("b"), "x", "i"
     )

@@ -26,6 +26,20 @@ per-job floor on every read of a partitioned table (about 0.55 s for a
 for local masters, so listing happens in the driver. A cluster session —
 a non-local master, or a session passed in from outside — keeps Spark's
 default, where distributed listing of many directories pays off.
+
+Python worker tasks: a task that runs in a forked Python worker
+(``mapInPandas``/``mapInArrow``/UDFs, and any scan of a pickled Python
+RDD such as ``spark.createDataFrame(<python list>)``) costs about
+0.25 s on a 4-CPU host, against about 0.05 s for a JVM-only job. The
+time is spent before any user code runs: the worker's
+``setup_spark_files`` calls ``importlib.invalidate_caches()``, which
+under Python 3.11 re-reads ``pyspark.zip``'s central directory once
+per cached zip importer (16 of them); with that call stubbed out the
+in-worker time fell from 0.25 s to 0.045 s. Workers are not reused
+either: each exits (code -1) after its task. So a job whose work is
+decoding driver-held rows (``sources/load.local_frame`` builds a JVM
+``LocalTableScan`` instead) or evaluating a SQL-expressible formula
+must not start a Python worker.
 """
 
 from __future__ import annotations

@@ -291,3 +291,38 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = _events_from_nanos(df)
     per_session[key] = df
     return df
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over rows the driver already holds, planned as a JVM
+    ``LocalTableScan``.
+
+    ``rows`` is a sequence of tuples (or Rows) in ``schema`` order;
+    ``schema`` is a StructType or a DDL string. The rows become one
+    pyarrow table (``to_arrow_schema(schema)``) that
+    ``spark.createDataFrame`` ships to the JVM as a local relation.
+    ``spark.createDataFrame(<python list>, schema)`` would instead plan
+    a pickled Python RDD (``Scan ExistingRDD``), whose every job starts
+    Python worker tasks only to decode rows (their cost: ``session.py``
+    notes). ``tests/test_plans.py`` checks long, int, double, string,
+    date, ``array<double>``, NULLs and an empty row list.
+
+    Not for naive ``TimestampType`` values: the list path converts them
+    in the Python process's local time zone, while Arrow reads them as
+    UTC wall time, so the two differ under e.g. ``TZ=America/New_York``.
+    ``streaming/runtime.write_replay_batch`` keeps the list path for
+    that reason.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

@@ -90,8 +90,11 @@ def merge_delta(
     ``d_agg`` carries exactly the view's columns, ``part`` included.
 
     Only the touched partitions are read and rewritten: agg(ΔB) is
-    collected once and its rows give both the affected ``part`` values
-    and the merge input; the prior slice is read with ``d_agg.schema``
+    collected once as an Arrow table (``d_agg.toArrow()``), whose
+    ``part`` column gives the affected values and which re-enters Spark
+    as the merge input through ``createDataFrame`` — a JVM local
+    relation, so no job of the merge starts a Python worker to decode
+    driver-held rows; the prior slice is read with ``d_agg.schema``
     (no footer-inference job) and filtered to those partitions; the
     merge is written by a per-write dynamic partition overwrite
     (``sinks.overwrite_partitions_dynamic``). A batch costs
@@ -99,24 +102,25 @@ def merge_delta(
     where a recompute scans all history per batch: at 100 TB × daily
     batches, minutes against a day.
 
-    Driver bound: the collect holds |agg(ΔB)| rows per batch, that is
+    Driver bound: the Arrow collect, and the local relation built from
+    the same table, hold |agg(ΔB)| rows per batch, that is
     one per touched day for the revenue rollup, one per touched
     (day, user) pair for the DAU store and one per touched
     (source, token|gram) group for the scorecard (4,986 gram rows for a
     100-doc delta at sf0.001). A feed whose aggregated batch outgrows
     the driver must be cut into smaller batches before this merge.
     """
-    rows = d_agg.collect()
-    if not rows:
+    delta = d_agg.toArrow()
+    if not delta.num_rows:
         return []
-    affected = sorted({str(r[part]) for r in rows})
+    affected = sorted({str(v) for v in delta.column(part).to_pylist()})
     prior = (
         spark.read.schema(d_agg.schema)
         .parquet(path)
         .filter(F.col(part).isin(affected))
         .select(*d_agg.columns)
     )
-    merged = prior.unionByName(spark.createDataFrame(rows, d_agg.schema))
+    merged = prior.unionByName(spark.createDataFrame(delta, d_agg.schema))
     keys = [c for c in d_agg.columns if c not in sums]
     merged = (
         merged.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sums])

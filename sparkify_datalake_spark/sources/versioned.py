@@ -35,6 +35,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sparkify_datalake_spark.sources.load import local_frame
+
 
 class VersionConflict(Exception):
     """Another writer committed this version first; retry at latest+1."""
@@ -317,7 +319,7 @@ def read_version_pruned(
     m = _manifest_at(path, version)
     keep, _all = prune_files(path, col, lo, hi, m["version"])
     if not keep:
-        return spark.createDataFrame([], _read_schema(m))
+        return local_frame(spark, [], _read_schema(m))
     pred = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
     return _scan(spark, path, m, keep).filter(pred)
 

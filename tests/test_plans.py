@@ -963,3 +963,78 @@ def test_quantile_bucket_matches_global_ntile(spark):
             .collect()
         )
         assert got == ref
+
+
+# Jobs that only decode driver-held rows or evaluate a SQL-expressible
+# formula run no Python worker: no pickled-RDD scan (`Scan ExistingRDD`)
+# and no pandas kernel (`MapInPandas`) in the executed plan.
+@pytest.mark.parametrize("name", ["pipeline_curation_e2e", "sim_ivf_topk"])
+def test_driver_rows_and_ivf_probe_start_no_python_worker(spark, name):
+    df = queries()[name](spark, SF_DIR)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+    assert "MapInPandas" not in plan, plan
+
+
+def test_merge_delta_reenters_delta_as_local_relation(
+    spark, tmp_path, monkeypatch
+):
+    from pyspark.sql import functions as F
+
+    from sparkify_datalake_spark.sources import matview
+    from sparkify_datalake_spark.sources.load import load
+
+    orders = load(spark, SF_DIR, "orders")
+    path = str(tmp_path / "mv")
+    cutoff = "1998-01-01"
+    matview.matview_init(
+        spark, orders.filter(F.col("o_orderdate") < cutoff), path
+    )
+    plans = []
+    write = matview.overwrite_partitions_dynamic
+
+    def capture(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(df, *args, **kwargs)
+
+    monkeypatch.setattr(matview, "overwrite_partitions_dynamic", capture)
+    assert matview.matview_apply(
+        spark, path, orders.filter(F.col("o_orderdate") >= cutoff)
+    )
+    assert len(plans) == 1
+    assert "LocalTableScan" in plans[0], plans[0]
+    assert "ExistingRDD" not in plans[0], plans[0]
+
+
+def test_local_frame_matches_create_dataframe(spark):
+    import datetime as dt
+
+    from sparkify_datalake_spark.sources.load import local_frame
+
+    ddl = "a long, b int, c double, d string, e date, f array<double>"
+    rows = [
+        (1, 2, 0.5, "x", dt.date(1996, 6, 15), [1.0, -2.5]),
+        (None, None, None, None, None, None),
+        (2**40, -7, -1e300, "", dt.date(1970, 1, 1), []),
+        (3, 0, 1.0, "ü", dt.date(2024, 2, 29), [None, 3.25]),
+    ]
+    for data in (rows, []):
+        got = local_frame(spark, data, ddl)
+        want = spark.createDataFrame(data, ddl)
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
+        assert "LocalTableScan" in (
+            got._jdf.queryExecution().executedPlan().toString()
+        )
+
+
+def test_ivf_at_full_probe_equals_exact_twin(spark):
+    # nprobe = _IVF_K scans every cluster, so the IVF probe must return
+    # exactly the brute-force rows: same expression, rounding and order
+    from sparkify_datalake_spark.operators import similarity as sim
+
+    got = sim.ivf_topk(spark, SF_DIR, sim._IVF_K).collect()
+    want = queries()["sim_cosine_topk"](spark, SF_DIR).collect()
+    assert len(want) == 10
+    assert got == want
