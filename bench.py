@@ -4,10 +4,11 @@ print ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
 
 The recording harness keeps only the LAST 2000 bytes of stdout
-(observed: BENCH_r1..r3 all have a 2000-char `tail` truncated mid-JSON
-and `parsed: null`), so the stdout line is kept UNDER 1900 bytes: it
-carries the headline metric, the suite totals, and as many per-query
-timings (headline queries first) as fit the budget. The COMPLETE
+(observed: the first three rounds' bench records, in git history, all
+have a 2000-char `tail` truncated mid-JSON and `parsed: null`), so the
+stdout line is kept UNDER 1900 bytes: it carries the headline metric,
+the suite totals, and as many per-query timings (headline queries
+first) as fit the budget. The COMPLETE
 per-query map is always written to BENCH_FULL_local.json next to this
 script and committed with the round.
 

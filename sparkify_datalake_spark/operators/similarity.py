@@ -44,15 +44,24 @@ _DIM = 64
 # resolved corpus path, a data fingerprint (size+mtime) — so
 # regenerating the corpus at the same path invalidates the index
 # instead of silently serving stale answers, and deletes the superseded
-# one — and _INDEX_LAYOUT. A build publishes the whole kind dir
-# (both of its tables) through sinks.replace_dir, so a kind dir that
-# exists is complete. On a cluster this is an object-store prefix keyed
-# by the corpus table's snapshot/commit id.
+# one — and _INDEX_LAYOUT. A kind dir holds the driver-side model as
+# one .npy file (IVF centroids.npy, PQ codebooks.npy) beside the
+# Parquet table a probe scans (IVF assignment/, PQ codes/). A build
+# publishes the whole kind dir through sinks.replace_dir, so a kind dir
+# that exists is complete, and loading its model is one np.load with
+# no Spark job and no in-process cache. On a cluster this is an
+# object-store prefix keyed by the corpus table's snapshot/commit id.
 _INDEX_ROOT = Path(__file__).resolve().parents[2] / "spark-warehouse" / "ann_index"
-# bump when the on-disk index layout or its publish protocol changes:
-# older code marked completeness with marker files, so a dir it left
-# half-built exists without being complete and must never be served
-_INDEX_LAYOUT = 2
+# bump when the on-disk index layout or its publish protocol changes.
+# 2: completeness by replace_dir instead of marker files. 3: the model
+# moved from a Parquet table to a .npy file, so an L2 dir has no model
+# to load; snapshot_dir deletes it as superseded instead of serving it.
+_INDEX_LAYOUT = 3
+
+# fixed schemas of the index tables: a read that passes them runs no
+# footer-inference job
+_ASSIGN_SCHEMA = "vec_id long, embedding array<float>, cluster int"
+_CODES_SCHEMA = "vec_id long, codes array<smallint>"
 
 
 def _index_dir(sf_dir: str, kind: str) -> str:
@@ -60,6 +69,20 @@ def _index_dir(sf_dir: str, kind: str) -> str:
         snapshot_dir(_INDEX_ROOT, sf_dir, "embeddings", f"L{_INDEX_LAYOUT}"),
         kind,
     )
+
+
+def _query_vector(spark: SparkSession, sf_dir: str):
+    """The ANN tiers' query, vec_id 0's embedding, as a float64 array
+    (one bounded collect)."""
+    import numpy as np
+
+    row = (
+        load(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") == 0)
+        .select("embedding")
+        .collect()[0]
+    )
+    return np.array(row["embedding"], dtype=np.float64)
 
 
 def _dot(a: Column | str, b: Column | str) -> Column:
@@ -152,6 +175,22 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(target))
+        .select("vec_id", F.round(cos, 6).alias("cos_sim"))
+        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
+        .limit(10)
+    )
+
+
+def _exact_topk(frame: DataFrame, q) -> DataFrame:
+    """The ANN tiers' exact re-rank: sim_cosine_topk's cosine between
+    each (vec_id, embedding) row of ``frame`` other than the query and
+    the query vector ``q`` as a literal array, rounded, ordered and
+    limited the same way. It runs in the JVM, and over the whole corpus
+    it equals sim_cosine_topk row for row."""
+    qa = F.array(*[F.lit(float(v)) for v in q])
+    cos = _dot("embedding", qa) / (_norm("embedding") * _norm(qa))
+    return (
+        frame.filter(F.col("vec_id") != 0)
         .select("vec_id", F.round(cos, 6).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(10)
@@ -579,17 +618,40 @@ _IVF_ITERS = 2
 _IVF_NPROBE = 3
 
 
+def _assign(emb: DataFrame, cent) -> DataFrame:
+    """Nearest-centroid assignment of (vec_id, embedding) rows — the one
+    IVF kernel, run by each Lloyd iteration and by the build that
+    persists the assignment table. ``cent`` (k×64 float64, bytes, not
+    data) ships in the Arrow kernel's closure."""
+    import numpy as np
+    import pandas as pd
+
+    def assign(batches):
+        for pdf in batches:
+            x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            d = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"],
+                    "cluster": d.argmin(axis=1).astype("int32"),
+                    "embedding": pdf["embedding"],
+                }
+            )
+
+    return emb.mapInPandas(
+        assign, "vec_id long, cluster int, embedding array<float>"
+    )
+
+
 def _kmeans_centroids(spark: SparkSession, sf_dir: str):
     """Lloyd's k-means coarse quantizer — the IVF training step.
 
-    The MLlib topology: centroids (k×64 floats — bytes, not data) live on
-    the driver and ship into each iteration's Arrow kernel closure; the
-    assignment pass is distributed (one mapInPandas over the corpus), and
+    The MLlib topology: centroids live on the driver; the assignment
+    pass is distributed (_assign, one mapInPandas over the corpus), and
     the centroid update is one small groupBy. Deterministic: init =
     vectors with vec_id 0..k-1, fixed iteration count, float64 math.
     """
     import numpy as np
-    import pandas as pd
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cent = np.stack(
@@ -601,28 +663,10 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str):
         ]
     )
     for _ in range(_IVF_ITERS):
-        c = cent  # bind for closure
-
-        def assign(batches):
-            for pdf in batches:
-                x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-                d = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "cluster": d.argmin(axis=1).astype("int32"),
-                        "embedding": pdf["embedding"],
-                    }
-                )
-
-        assigned = emb.mapInPandas(
-            assign, "vec_id long, cluster int, embedding array<float>"
-        )
         # centroid update: per-dimension mean via one small groupBy
         sums = (
-            assigned.select(
-                "cluster", F.posexplode("embedding").alias("dim", "v")
-            )
+            _assign(emb, cent)
+            .select("cluster", F.posexplode("embedding").alias("dim", "v"))
             .groupBy("cluster", "dim")
             .agg(F.avg(F.col("v").cast("double")).alias("m"))
             .collect()
@@ -636,17 +680,12 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str):
 
 # Build/probe split: a real IVF engine trains the coarse quantizer ONCE
 # (an offline build step), PERSISTS the index, and serves many probes
-# against it. ivf_build publishes two tables in one index dir:
-#   centroids/   (cluster, centroid array<double>)  — k×64 floats, tiny
-#   assignment/  (vec_id, embedding) PARTITIONED BY cluster
+# against it. ivf_build publishes one index dir:
+#   centroids.npy  k×64 float64 — the model, loaded by np.load
+#   assignment/    (vec_id, embedding) PARTITIONED BY cluster
 # A probe reads only the nprobe partition directories (partition
 # pruning) — the former shape re-scanned and re-assigned the full raw
 # corpus per probe, paying O(corpus) and never realizing the IVF win.
-# The in-process dict caches the (tiny) centroid array per index dir
-# (the snapshot key, never the raw sf_dir string — a path repointed at
-# another corpus must not pair one corpus's centroids with another's
-# assignment) to skip re-reading the centroid parquet within a session.
-_IVF_CENTROIDS: dict[str, "object"] = {}
 
 
 def ivf_build(spark: SparkSession, sf_dir: str, force: bool = False):
@@ -662,57 +701,27 @@ def ivf_build(spark: SparkSession, sf_dir: str, force: bool = False):
     import numpy as np
 
     kind_dir = _index_dir(sf_dir, "ivf")
-    cent_path = os.path.join(kind_dir, "centroids")
     assign_path = os.path.join(kind_dir, "assignment")
     if not force and recover_dir(kind_dir):
-        if kind_dir not in _IVF_CENTROIDS:
-            rows = spark.read.parquet(cent_path).orderBy("cluster").collect()
-            _IVF_CENTROIDS[kind_dir] = np.stack(
-                [np.array(r["centroid"], dtype=np.float64) for r in rows]
-            )
-        return _IVF_CENTROIDS[kind_dir], assign_path
+        return np.load(os.path.join(kind_dir, "centroids.npy")), assign_path
 
     cent = _kmeans_centroids(spark, sf_dir)
-    c = cent
-
-    def assign(batches):
-        import numpy as np_
-        import pandas as pd_
-
-        for pdf in batches:
-            x = np_.stack(pdf["embedding"].to_numpy()).astype(np_.float64)
-            cl = (
-                ((x[:, None, :] - c[None, :, :]) ** 2)
-                .sum(axis=2)
-                .argmin(axis=1)
-            )
-            yield pd_.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "cluster": cl.astype("int32"),
-                    "embedding": pdf["embedding"],
-                }
-            )
-
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     def write(staging: str) -> None:
-        (
-            emb.mapInPandas(
-                assign, "vec_id long, cluster int, embedding array<float>"
-            )
-            .write.partitionBy("cluster")
-            .parquet(os.path.join(staging, "assignment"))
+        _assign(emb, cent).write.partitionBy("cluster").parquet(
+            os.path.join(staging, "assignment")
         )
-        local_frame(
-            spark,
-            [(i, [float(v) for v in cent[i]]) for i in range(len(cent))],
-            "cluster int, centroid array<double>",
-        ).coalesce(1).write.parquet(os.path.join(staging, "centroids"))
+        np.save(os.path.join(staging, "centroids.npy"), cent)
 
     replace_dir(kind_dir, write)
-    _IVF_CENTROIDS[kind_dir] = cent
     return cent, assign_path
+
+
+def ivf_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted IVF assignment table, read with its fixed schema."""
+    _, assign_path = ivf_build(spark, sf_dir)
+    return spark.read.schema(_ASSIGN_SCHEMA).parquet(assign_path)
 
 
 def ivf_probe_scan(
@@ -726,8 +735,7 @@ def ivf_probe_scan(
     asserts the executed scan reads files from exactly these partition
     directories.
     """
-    _, assign_path = ivf_build(spark, sf_dir)
-    return spark.read.parquet(assign_path).filter(
+    return ivf_assignment(spark, sf_dir).filter(
         F.col("cluster").isin([int(x) for x in clusters])
     )
 
@@ -739,28 +747,15 @@ def ivf_topk(
     parameterized engine behind sim_ivf_topk, exposed so the
     recall-vs-cost curve (tools/ann_curves.py, 64×-asserted in
     tests/test_scaling.py) can sweep nprobe over the SAME plan the
-    registered query runs.
-
-    The probed rows are scored with the exact twin's expression
-    (sim_cosine_topk's ``_dot``/``_norm`` over the query vector as a
-    literal array), rounded, ordered and limited the same way, so the
-    probe runs in the JVM with no Python worker, and at nprobe = _IVF_K
-    the result equals sim_cosine_topk row for row."""
+    registered query runs. The probed rows go through the exact
+    re-rank (_exact_topk), so at nprobe = _IVF_K the result equals
+    sim_cosine_topk row for row."""
     import numpy as np
 
     cent, _ = ivf_build(spark, sf_dir)
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qv = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-    probe = np.argsort(((cent - np.array(qv)) ** 2).sum(axis=1))[:nprobe]
-    q = F.array(*[F.lit(v) for v in qv])
-    cos = _dot("embedding", q) / (_norm("embedding") * _norm(q))
-    return (
-        ivf_probe_scan(spark, sf_dir, probe)
-        .filter(F.col("vec_id") != 0)
-        .select("vec_id", F.round(cos, 6).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-        .limit(10)
-    )
+    q = _query_vector(spark, sf_dir)
+    probe = np.argsort(((cent - q) ** 2).sum(axis=1))[:nprobe]
+    return _exact_topk(ivf_probe_scan(spark, sf_dir, probe), q)
 
 
 @query("sim_ivf_topk")
@@ -772,8 +767,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     BY cluster assignment once; a probe ranks the centroids against the
     query and scans only the nprobe=3 nearest partitions (partition
     pruning skips the rest — nprobe/k of the corpus, the actual IVF
-    win). The probed rows are scored with the brute-force twin's own
-    cosine expression, in the JVM. Rows-only: recall is probabilistic
+    win). The probed rows go through the exact re-rank (_exact_topk),
+    in the JVM. Rows-only: recall is probabilistic
     by design; tests assert overlap with the brute-force twin
     (sim_cosine_topk), and the
     nprobe∈{1,2,4,8} recall-vs-scanned-fraction curve at the 64× probe
@@ -816,17 +811,15 @@ _PQ_RERANK = 500   # ADC candidates re-ranked exactly. With the m=16
                    # O(pool), not O(corpus). History: m=8 needed 2000
                    # and still only reached 0.8 — the m dial, not the
                    # pool dial, is what buys recall.
-# codebooks cached per index dir, as _IVF_CENTROIDS
-_PQ_CODEBOOKS: dict[str, "object"] = {}
 
 
 def pq_build(spark: SparkSession, sf_dir: str, force: bool = False):
     """Build (or load) the persisted PQ index for a corpus.
 
-    Returns ``(codebooks ndarray, codes_table_path)``. Two tables in one
-    index dir, published together (see ivf_build):
-      codebooks/  (m, k, centroid array<double>) — _PQ_M×_PQ_K rows
-      codes/      (vec_id, codes array<smallint>) — M small ids/vector
+    Returns ``(codebooks ndarray, codes_table_path)``. One index dir,
+    published whole (see ivf_build):
+      codebooks.npy  _PQ_M×_PQ_K×(64/_PQ_M) float64 — the model
+      codes/         (vec_id, codes array<smallint>) — M small ids/vector
     Codebooks train driver-side on a fixed deterministic sample
     (vec_id < _PQ_TRAIN_N — the standard FAISS practice: PQ training
     needs a bounded sample, not the corpus; the sample is
@@ -845,19 +838,9 @@ def pq_build(spark: SparkSession, sf_dir: str, force: bool = False):
     # must NEVER silently reuse codes built under the old geometry (a
     # k=32 codebook read into a k=64 array is garbage, not an error)
     kind_dir = _index_dir(sf_dir, f"pq_m{_PQ_M}_k{_PQ_K}_t{_PQ_TRAIN_N}")
-    books_path = os.path.join(kind_dir, "codebooks")
     codes_path = os.path.join(kind_dir, "codes")
     if not force and recover_dir(kind_dir):
-        if kind_dir not in _PQ_CODEBOOKS:
-            rows = spark.read.parquet(books_path).orderBy("m", "k").collect()
-            d_sub = len(rows[0]["centroid"])
-            books = np.empty((_PQ_M, _PQ_K, d_sub))
-            for r in rows:
-                books[r["m"], r["k"]] = np.array(
-                    r["centroid"], dtype=np.float64
-                )
-            _PQ_CODEBOOKS[kind_dir] = books
-        return _PQ_CODEBOOKS[kind_dir], codes_path
+        return np.load(os.path.join(kind_dir, "codebooks.npy")), codes_path
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     sample = np.stack(
@@ -905,48 +888,28 @@ def pq_build(spark: SparkSession, sf_dir: str, force: bool = False):
             )
 
     def write(staging: str) -> None:
-        emb.mapInPandas(
-            encode, "vec_id long, codes array<smallint>"
-        ).write.parquet(os.path.join(staging, "codes"))
-        local_frame(
-            spark,
-            [
-                (m, k, [float(v) for v in books[m, k]])
-                for m in range(_PQ_M)
-                for k in range(_PQ_K)
-            ],
-            "m int, k int, centroid array<double>",
-        ).coalesce(1).write.parquet(os.path.join(staging, "codebooks"))
+        emb.mapInPandas(encode, _CODES_SCHEMA).write.parquet(
+            os.path.join(staging, "codes")
+        )
+        np.save(os.path.join(staging, "codebooks.npy"), books)
 
     replace_dir(kind_dir, write)
-    _PQ_CODEBOOKS[kind_dir] = books
     return books, codes_path
 
 
-@query("sim_pq_topk")
-def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN top-10 for vec_id=0 via product quantization + exact re-rank.
-
-    Probe path: (1) scan the PERSISTED codes table — vec_id + _PQ_M
-    5-bit codes per row, written once by pq_build, no raw vectors read;
-    (2) asymmetric distance computation — the query precomputes an
-    (_PQ_M × _PQ_K) lookup table and each vector's approximate distance
-    is M table lookups, no float math; (3) only the ADC top-_PQ_RERANK
-    (200) candidates join back to the raw corpus (broadcast of 200 ids)
-    for the exact-cosine re-rank (FAISS's standard refine step),
-    returning top-10. Rows-only: PQ recall is approximate by design;
-    the pytest recall bound vs the brute-force twin is the check.
-    """
+def _adc_topk(
+    spark: SparkSession, sf_dir: str, codes: DataFrame, q, books, pool: int
+) -> DataFrame:
+    """The PQ probe over a codes frame: asymmetric distance computation
+    — the query precomputes an (_PQ_M × _PQ_K) lookup table and each
+    vector's approximate distance is M table lookups, no float math —
+    then only the ADC top-``pool`` candidates join back to the raw
+    corpus (broadcast of ``pool`` ids) for the exact re-rank (FAISS's
+    standard refine step), returning top-10."""
     import numpy as np
     import pandas as pd
 
-    books, codes_path = pq_build(spark, sf_dir)
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = np.array(
-        emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"],
-        dtype=np.float64,
-    )
-    m_sub, k_sub, d_sub = books.shape
+    m_sub, _, d_sub = books.shape
     # ADC lookup table: distance from each query subvector to each centroid
     lut = np.stack(
         [
@@ -961,30 +924,40 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            dist = lut[np.arange(m_sub)[None, :], codes].sum(axis=1)
-            keep = pdf["vec_id"].to_numpy() != 0
+            c = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
             yield pd.DataFrame(
                 {
-                    "vec_id": pdf["vec_id"].to_numpy()[keep],
-                    "adc_dist": dist[keep],
+                    "vec_id": pdf["vec_id"].to_numpy(),
+                    "adc_dist": lut[np.arange(m_sub)[None, :], c].sum(axis=1),
                 }
             )
 
     candidates = (
-        spark.read.parquet(codes_path)
+        codes.filter(F.col("vec_id") != 0)
         .mapInPandas(adc, "vec_id long, adc_dist double")
         .orderBy(F.col("adc_dist").asc(), F.col("vec_id"))
-        .limit(_PQ_RERANK)
+        .limit(pool)
     )
-    cos = _dot("embedding", F.array(*[F.lit(float(v)) for v in q])) / (
-        _norm("embedding") * float(np.sqrt((q * q).sum()))
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _exact_topk(
+        emb.join(F.broadcast(candidates.select("vec_id")), "vec_id"), q
     )
-    return (
-        emb.join(F.broadcast(candidates.select("vec_id")), "vec_id")
-        .select("vec_id", F.round(cos, 6).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-        .limit(10)
+
+
+@query("sim_pq_topk")
+def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ANN top-10 for vec_id=0 via product quantization + exact re-rank.
+
+    Probe path: scan the PERSISTED codes table — vec_id + _PQ_M 6-bit
+    codes per row, written once by pq_build, no raw vectors read — with
+    the ADC probe (_adc_topk), then re-rank the top-_PQ_RERANK (500)
+    candidates exactly. Rows-only: PQ recall is approximate by design;
+    the pytest recall bound vs the brute-force twin is the check.
+    """
+    books, codes_path = pq_build(spark, sf_dir)
+    codes = spark.read.schema(_CODES_SCHEMA).parquet(codes_path)
+    return _adc_topk(
+        spark, sf_dir, codes, _query_vector(spark, sf_dir), books, _PQ_RERANK
     )
 
 
@@ -1141,9 +1114,8 @@ def sim_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_oracle.py bounds ≥ 0.5 — surfacing it as a query makes
     index drift observable in production, not just in CI.
     """
-    _, assign_path = ivf_build(spark, sf_dir)
     sizes = (
-        spark.read.parquet(assign_path)
+        ivf_assignment(spark, sf_dir)
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -1818,62 +1790,22 @@ def sim_ivf_pq_topk(
     composed recall-vs-cost grid (ANN_CURVES_hard.json "ivfpq").
     """
     import numpy as np
-    import pandas as pd
 
     nprobe = _IVF_NPROBE if nprobe is None else int(nprobe)
     rerank = _PQ_RERANK if rerank is None else int(rerank)
     cent, _ = ivf_build(spark, sf_dir)
     books, codes_path = pq_build(spark, sf_dir)
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = np.array(
-        emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"],
-        dtype=np.float64,
-    )
+    q = _query_vector(spark, sf_dir)
     probe = np.argsort(((cent - q) ** 2).sum(axis=1))[:nprobe]
-    m_sub, k_sub, d_sub = books.shape
-    lut = np.stack(
-        [
-            (
-                (q[m * d_sub : (m + 1) * d_sub][None, :] - books[m]) ** 2
-            ).sum(axis=1)
-            for m in range(m_sub)
-        ]
-    )
-
     # membership of the probed partitions: column-pruned directory-
     # pruned scan — vec_id only, no floats read
     member = ivf_probe_scan(spark, sf_dir, probe).select("vec_id")
-
-    def adc(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            dist = lut[np.arange(m_sub)[None, :], codes].sum(axis=1)
-            keep = pdf["vec_id"].to_numpy() != 0
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy()[keep],
-                    "adc_dist": dist[keep],
-                }
-            )
-
-    candidates = (
-        spark.read.parquet(codes_path)
+    codes = (
+        spark.read.schema(_CODES_SCHEMA)
+        .parquet(codes_path)
         .join(F.broadcast(member), "vec_id")
-        .mapInPandas(adc, "vec_id long, adc_dist double")
-        .orderBy(F.col("adc_dist").asc(), F.col("vec_id"))
-        .limit(rerank)
     )
-    cos = _dot("embedding", F.array(*[F.lit(float(v)) for v in q])) / (
-        _norm("embedding") * float(np.sqrt((q * q).sum()))
-    )
-    return (
-        emb.join(F.broadcast(candidates.select("vec_id")), "vec_id")
-        .select("vec_id", F.round(cos, 6).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
-        .limit(10)
-    )
+    return _adc_topk(spark, sf_dir, codes, q, books, rerank)
 
 
 _MRL_DIMS = (8, 16, 32, 64)
@@ -1910,10 +1842,7 @@ def embed_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = np.array(
-        emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"],
-        dtype=np.float64,
-    )
+    q = _query_vector(spark, sf_dir)
     dims = list(_MRL_DIMS)
 
     def score(batches):

@@ -1,7 +1,8 @@
 """Pin the bench.py stdout contract.
 
 The recording harness keeps only the last 2000 bytes of stdout (observed
-in BENCH_r1..r3: a 2000-char `tail` truncated mid-JSON, `parsed: null`),
+in the first three rounds' bench records, in git history: a 2000-char
+`tail` truncated mid-JSON, `parsed: null`),
 so the single JSON line bench.py prints must stay comfortably inside
 that window no matter how many queries the registry grows to.
 """

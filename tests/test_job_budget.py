@@ -5,10 +5,10 @@ checkpoints specifically to cut their scheduled-job counts (each
 driver-side job pays the ~0.16 s per-job scheduler floor regardless of
 data size). This pins each one's BUILD-phase job count — jobs triggered
 while the query callable constructs its plan — to the census sealed in
-BENCH_FULL_r10.json, so a later edit can't silently re-add an eager
-checkpoint, a broadcast-build collect, or a totals-join re-scan. The
-bound is a ceiling: scheduling FEWER jobs is an improvement, not a
-regression.
+the round-10 full bench record (BENCH_FULL_r10.json, in git history),
+so a later edit can't silently re-add an eager checkpoint, a
+broadcast-build collect, or a totals-join re-scan. The bound is a
+ceiling: scheduling FEWER jobs is an improvement, not a regression.
 
 Build-phase jobs are structural (one per bounded collect / eager
 checkpoint in the query's construction path), so the sf0.001 test
@@ -22,7 +22,7 @@ import pytest
 
 from sparkify_datalake_spark.registry import queries
 
-# name -> sealed build_jobs from BENCH_FULL_r10.json (the r10 census).
+# name -> sealed build_jobs from the r10 census (see the module docstring).
 # mine_basket_triples is pinned at 10, one above its sealed sf0.1 count:
 # one of its bounded collects schedules an extra AQE stage-materialize
 # job at sf0.001 (measured min-of-3 on the sealed tree — size-dependent
@@ -170,3 +170,43 @@ def test_view_store_apply_jobs_within_ceiling(spark, sf_dir, tmp_path, store):
         f"{VIEW_STORE_APPLY_JOBS[store]} — a checkpoint, a separate "
         "affected-key collect or a footer-schema read crept back in"
     )
+
+
+# Jobs per call of the ANN tiers over an index already on disk. The model
+# is a .npy file in the index dir and every index table is read with its
+# fixed schema, so loading an index runs no job, and building a probe
+# runs one: the collect of the query vector. Models kept as Parquet
+# tables, read back by Spark, and schema-less table reads took 4 jobs per
+# load in a new process and 2, 2 and 3 jobs per build.
+ANN_BUILD_JOBS = {"sim_ivf_topk": 1, "sim_pq_topk": 1, "sim_ivf_pq_topk": 1}
+
+
+@pytest.mark.parametrize("name", sorted(ANN_BUILD_JOBS))
+def test_ann_probe_build_jobs_within_ceiling(spark, sf_dir, name):
+    q = queries()[name]
+    q(spark, sf_dir)  # warm: builds a missing index, relation cache
+    built = _jobs(spark, lambda: q(spark, sf_dir))
+    assert built <= ANN_BUILD_JOBS[name], (
+        f"{name} schedules {built} jobs at plan build; the ceiling is "
+        f"{ANN_BUILD_JOBS[name]} — a model read or a footer-schema read "
+        "of an index table crept back in"
+    )
+
+
+@pytest.mark.parametrize("build", ["ivf_build", "pq_build"])
+def test_ann_index_load_runs_no_job(spark, sf_dir, tmp_path, monkeypatch, build):
+    import os
+    import shutil
+
+    from sparkify_datalake_spark.operators import similarity as sim
+
+    fn = getattr(sim, build)
+    _, table = fn(spark, sf_dir)
+    key = os.path.dirname(os.path.dirname(table))
+    # the index as a new process finds it: on disk, under a root this
+    # process has never loaded from
+    root = tmp_path / "ann_index"
+    shutil.copytree(key, root / os.path.basename(key))
+    monkeypatch.setattr(sim, "_INDEX_ROOT", root)
+    ran = _jobs(spark, lambda: fn(spark, sf_dir))
+    assert ran == 0, f"loading an existing {build} index ran {ran} jobs"

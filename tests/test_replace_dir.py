@@ -1,6 +1,6 @@
 """One publish protocol for every derived artifact (sources/sinks.py
 ``replace_dir``): a crash at any step leaves a state the next call
-repairs, and the ANN caches follow the index snapshot, not the path
+repairs, and the ANN indexes follow the corpus snapshot, not the path
 string the caller passed."""
 
 from __future__ import annotations
@@ -72,11 +72,9 @@ def _caller(name, spark, sf_dir, tmp_path, monkeypatch):
     crash, and ``read`` the artifact's content."""
     if name == "ivf_build":
         monkeypatch.setattr(sim, "_INDEX_ROOT", tmp_path / "ann_index")
-        monkeypatch.setattr(sim, "_IVF_CENTROIDS", {})
 
         def read(_path):
-            # a fresh process after the crash: nothing cached in memory
-            sim._IVF_CENTROIDS.clear()
+            # the centroids come from the index dir's model file
             cent, assign = sim.ivf_build(spark, sf_dir)
             return cent.tolist(), _rows(spark, assign)
 
@@ -89,7 +87,6 @@ def _caller(name, spark, sf_dir, tmp_path, monkeypatch):
                 "_kmeans_centroids",
                 lambda *a: trained.append(1) or real(*a),
             )
-            sim._IVF_CENTROIDS.clear()
             sim.ivf_build(spark, sf_dir)
             monkeypatch.setattr(sim, "_kmeans_centroids", real)
             assert not trained
@@ -228,18 +225,14 @@ def _negated_corpus(src_dir: str, dst_dir: str) -> None:
     )
 
 
-@pytest.mark.parametrize(
-    "build, cache",
-    [("ivf_build", "_IVF_CENTROIDS"), ("pq_build", "_PQ_CODEBOOKS")],
-)
+@pytest.mark.parametrize("build", ["ivf_build", "pq_build"])
 def test_ann_cache_follows_repointed_symlink(
-    spark, sf_dir, tmp_path, monkeypatch, build, cache
+    spark, sf_dir, tmp_path, monkeypatch, build
 ):
     """A corpus path that is a symlink, repointed from corpus A to
     corpus B whose index is already on disk, must serve B's centroids
-    (codebooks) with B's table — never A's cached ones."""
+    (codebooks) with B's table — never A's."""
     monkeypatch.setattr(sim, "_INDEX_ROOT", tmp_path / "ann_index")
-    monkeypatch.setattr(sim, cache, {})
     fn = getattr(sim, build)
     a, b, cur = (str(tmp_path / n) for n in ("a", "b", "cur"))
     os.makedirs(a)
@@ -265,11 +258,17 @@ def test_rebuild_after_rewrite_deletes_superseded_index(
     other corpus paths alone."""
     root = tmp_path / "ann_index"
     monkeypatch.setattr(sim, "_INDEX_ROOT", root)
-    monkeypatch.setattr(sim, "_IVF_CENTROIDS", {})
     corpus = str(tmp_path / "corpus")
     os.makedirs(corpus)
     shutil.copyfile(f"{sf_dir}/embeddings.parquet", f"{corpus}/embeddings.parquet")
+    # an index of the previous layout (a Parquet model, no .npy file) is
+    # superseded, not served
+    stale = os.path.dirname(sim._index_dir(corpus, "ivf")).replace(
+        f"-L{sim._INDEX_LAYOUT}", "-L2"
+    )
+    os.makedirs(os.path.join(stale, "ivf", "centroids"))
     sim.ivf_build(spark, corpus)
+    assert not os.path.exists(stale)
     old_key = os.path.dirname(sim._index_dir(corpus, "ivf"))
     other = root / "other-0123456789-0123456789-L2"
     other.mkdir()

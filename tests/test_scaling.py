@@ -67,30 +67,42 @@ def test_scaling_is_roughly_linear(spark, name):
 
 # --- ANN recall-vs-cost curves at the 64× probe (VERDICT r6 #6) -----------
 # The committed artifact ANN_CURVES_x64.json is produced by
-# tools/ann_curves.py; this test re-derives the same numbers from the
-# live index when the 64× fixture exists, so artifact and assertions
-# cannot drift apart silently. Claims: recall@10 is monotone
-# non-decreasing in nprobe and exact at nprobe=k (candidates only
-# grow; full scan is brute force), and the scanned fraction tracks
-# the nprobe/k pruning budget (1.25× headroom for quantizer
-# imbalance — a hot cluster would blow far past it).
+# tools/ann_curves.py; this test re-derives the same numbers from a live
+# index over the 64× probe's embeddings (128,000 vectors), so artifact
+# and assertions cannot drift apart silently. Claims: recall@10 is
+# monotone non-decreasing in nprobe and exact at nprobe=k (candidates
+# only grow; full scan is brute force), and the scanned fraction tracks
+# the nprobe/k pruning budget (1.25× headroom for quantizer imbalance —
+# a hot cluster would blow far past it).
 
-_X64 = "/tmp/sparkify_probe_x64_v2"
+_X64_VECTORS = 128_000
 
 
-@pytest.mark.slow
-@pytest.mark.skipif(
-    not __import__("os").path.exists(f"{_X64}/_PROBE_OK"),
-    reason="64x probe fixture not generated (tools/ann_curves.py builds it)",
-)
-def test_ann_recall_cost_curves_at_64x(spark):
+@pytest.fixture(scope="module")
+def x64_dir(spark, tmp_path_factory):
+    """The 64× probe's embeddings table in a tmp dir, with its ANN
+    indexes under a tmp root, so no 128k index is left in the shared
+    warehouse."""
     import sys
     from pathlib import Path
 
     sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
+    from gen_probe_fixture import gen_embeddings, write_table
+
+    from sparkify_datalake_spark.operators import similarity
+
+    d = str(tmp_path_factory.mktemp("x64"))
+    write_table(gen_embeddings(spark, _X64_VECTORS), d, "embeddings")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(similarity, "_INDEX_ROOT", tmp_path_factory.mktemp("ann"))
+        yield d
+
+
+@pytest.mark.slow
+def test_ann_recall_cost_curves_at_64x(spark, x64_dir):
     from ann_curves import ivf_curve, pq_recall
 
-    curve = ivf_curve(spark, _X64)
+    curve = ivf_curve(spark, x64_dir)
     recalls = [p["recall_at_10"] for p in curve["points"]]
     assert recalls == sorted(recalls), f"recall not monotone: {recalls}"
     assert recalls[-1] == 1.0, (
@@ -101,6 +113,6 @@ def test_ann_recall_cost_curves_at_64x(spark):
             f"nprobe={p['nprobe']} scanned {p['scanned_frac']:.3f} "
             f"of corpus vs budget {p['budget_frac']:.3f} — skewed quantizer"
         )
-    assert pq_recall(spark, _X64)["recall_at_10"] >= 0.7, (
+    assert pq_recall(spark, x64_dir)["recall_at_10"] >= 0.7, (
         "PQ ADC+rerank recall collapsed at 64x"
     )

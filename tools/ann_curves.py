@@ -41,10 +41,13 @@ NPROBES = (1, 2, 4, 8)
 
 def ivf_curve(spark, sf_dir: str) -> dict:
     """Recall@10 + scanned fraction per nprobe, plus per-cluster sizes."""
+    import numpy as np
     from pyspark.sql import functions as F
 
     from sparkify_datalake_spark.operators.similarity import (
         _IVF_K,
+        _query_vector,
+        ivf_assignment,
         ivf_build,
         ivf_probe_scan,
         ivf_topk,
@@ -55,32 +58,23 @@ def ivf_curve(spark, sf_dir: str) -> dict:
     exact = {
         r["vec_id"] for r in qs["sim_cosine_topk"](spark, sf_dir).collect()
     }
-    cent, assign_path = ivf_build(spark, sf_dir)
+    cent, _ = ivf_build(spark, sf_dir)
     sizes = {
         r["cluster"]: r["n"]
-        for r in spark.read.parquet(assign_path)
+        for r in ivf_assignment(spark, sf_dir)
         .groupBy("cluster")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
     total = sum(sizes.values())
+    q = _query_vector(spark, sf_dir)
+    order = np.argsort(((cent - q) ** 2).sum(axis=1))
     points = []
     for nprobe in NPROBES:
         ann = {r["vec_id"] for r in ivf_topk(spark, sf_dir, nprobe).collect()}
         # scanned rows re-derived from the pruned scan itself, so the
         # number reflects what the FileIndex actually reads
-        import numpy as np
-
-        from sparkify_datalake_spark.sources.load import load
-
-        q = np.array(
-            load(spark, sf_dir, "embeddings")
-            .filter(F.col("vec_id") == 0)
-            .collect()[0]["embedding"],
-            dtype=np.float64,
-        )
-        probe = np.argsort(((cent - q) ** 2).sum(axis=1))[:nprobe]
-        scanned = ivf_probe_scan(spark, sf_dir, probe).count()
+        scanned = ivf_probe_scan(spark, sf_dir, order[:nprobe]).count()
         points.append(
             {
                 "nprobe": nprobe,
@@ -149,7 +143,6 @@ def ivfpq_grid(spark, sf_dir: str) -> dict:
     the probed partitions / corpus — the IVF dial) and rerank_frac
     (exactly re-ranked pool / corpus — the PQ dial)."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from sparkify_datalake_spark.operators import similarity as sim
     from sparkify_datalake_spark.registry import queries
@@ -160,12 +153,7 @@ def ivfpq_grid(spark, sf_dir: str) -> dict:
         r["vec_id"] for r in qs["sim_cosine_topk"](spark, sf_dir).collect()
     }
     cent, _ = sim.ivf_build(spark, sf_dir)
-    q = np.array(
-        load(spark, sf_dir, "embeddings")
-        .filter(F.col("vec_id") == 0)
-        .collect()[0]["embedding"],
-        dtype=np.float64,
-    )
+    q = sim._query_vector(spark, sf_dir)
     order = np.argsort(((cent - q) ** 2).sum(axis=1))
     total = load(spark, sf_dir, "embeddings").count()
     scanned_by_nprobe = {}

@@ -243,6 +243,33 @@ def gen_orders(spark: SparkSession, n: int, n_cust: int) -> DataFrame:
     )
 
 
+def write_table(df: DataFrame, out_dir: str, name: str) -> None:
+    """Write ``df`` as the single file ``out_dir/{name}.parquet``.
+
+    Single file per table, mirroring the driver fixture layout;
+    repartition(1) keeps the expression evaluation parallel and funnels
+    only the write through one task (matters at 64×). parquet.block.size
+    16 MB: scan parallelism in BOTH engines is bounded by row-group
+    count, and the default 128 MB groups gave orders-at-64× only 2 row
+    groups — a 2-way scan on a 32-core box, which benchmarks the file
+    layout, not the engine. ~16 MB groups give the big tables 10–50
+    groups so splits land work. The tmp-write + os.replace makes the
+    table's appearance atomic.
+    """
+    import shutil
+
+    tmp = os.path.join(out_dir, f"_tmp_{name}")
+    df.repartition(1).write.mode("overwrite").option(
+        "parquet.block.size", 16 * 1024 * 1024
+    ).parquet(tmp)
+    part = next(
+        f for f in os.listdir(tmp)
+        if f.endswith(".parquet") and not f.startswith(".")
+    )
+    os.replace(os.path.join(tmp, part), os.path.join(out_dir, f"{name}.parquet"))
+    shutil.rmtree(tmp)
+
+
 def generate(spark: SparkSession, out_dir: str, scale: float) -> str:
     """Write a probe fixture dir at `scale`×(sf0.1 row counts); returns
     out_dir. Idempotent PER TABLE: `{name}.parquet` is only generated
@@ -284,29 +311,8 @@ def generate(spark: SparkSession, out_dir: str, scale: float) -> str:
     }
     os.makedirs(out_dir, exist_ok=True)
     for name, gen in gens.items():
-        final = os.path.join(out_dir, f"{name}.parquet")
-        if os.path.exists(final):
-            continue
-        # single file per table, mirroring the driver fixture layout;
-        # repartition(1) keeps the expression evaluation parallel and
-        # funnels only the write through one task (matters at 64×).
-        # parquet.block.size 16 MB: scan parallelism in BOTH engines is
-        # bounded by row-group count, and the default 128 MB groups gave
-        # orders-at-64× only 2 row groups — a 2-way scan on a 32-core
-        # box, which benchmarks the file layout, not the engine. ~16 MB
-        # groups give the big tables 10–50 groups so splits land work.
-        tmp = os.path.join(out_dir, f"_tmp_{name}")
-        gen().repartition(1).write.mode("overwrite").option(
-            "parquet.block.size", 16 * 1024 * 1024
-        ).parquet(tmp)
-        part = next(
-            f for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith(".")
-        )
-        os.replace(os.path.join(tmp, part), final)
-        import shutil
-
-        shutil.rmtree(tmp)
+        if not os.path.exists(os.path.join(out_dir, f"{name}.parquet")):
+            write_table(gen(), out_dir, name)
     marker = os.path.join(out_dir, _MARKER)
     if not os.path.exists(marker):
         open(marker, "w").close()
