@@ -24,11 +24,11 @@ Scale (100 TB): the grain is per-doc DISTINCT tokens — typically 3–10×
 smaller than the token stream — and localCheckpoint's MEMORY_AND_DISK
 storage spills; at web scale the drop-in swap is a persisted parquet
 snapshot of the same frame (then every consumer also regains vectorized
-reads). The cache is keyed by (applicationId, sf_dir, documents
-fingerprint) — the key `load` uses — so a documents.parquet rewritten
-at the same path builds a fresh grain instead of serving the old one.
-It holds ONE live grain: switching corpora drops the old reference so
-Spark's ContextCleaner unpersists it.
+reads). The grain is cached under `load`'s snapshot rule
+(`load.session_frame`): one grain per (session, corpus path), keyed by
+the documents fingerprint, so a documents.parquet rewritten at the same
+path replaces the old grain instead of serving it, and the replaced
+frame goes unreferenced for Spark's ContextCleaner to unpersist.
 
 Zipf's-law note: `text_zipf_fit` pins the regex tokenizer
 (`[^a-zA-Z0-9]+`) but rides this grain anyway (r12): whitespace is a
@@ -43,36 +43,25 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkify_datalake_spark.sources.load import corpus_fingerprint, load
-
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+from sparkify_datalake_spark.sources.load import load, session_frame
 
 
 def whitespace_tf_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, w, c): per-document whitespace-token counts,
     localCheckpointed once per (session, corpus snapshot) and shared by
     every text query whose report is a rollup of it."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        corpus_fingerprint(sf_dir, "documents"),
-    )
-    hit = _CACHE.get(key)
-    if hit is not None:
-        return hit
-    grain = (
-        load(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            "lang",
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"),
+
+    def build() -> DataFrame:
+        return (
+            load(spark, sf_dir, "documents")
+            .select(
+                "doc_id",
+                "lang",
+                F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"),
+            )
+            .groupBy("doc_id", "lang", "w")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .localCheckpoint(eager=False)
         )
-        .groupBy("doc_id", "lang", "w")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=False)
-    )
-    # one live grain: dropping the old reference lets ContextCleaner
-    # unpersist its RDD when it goes unreferenced
-    _CACHE.clear()
-    _CACHE[key] = grain
-    return grain
+
+    return session_frame(spark, sf_dir, "documents", "tf_grain", build)

@@ -15,6 +15,8 @@ single-file inputs.
 from __future__ import annotations
 
 import functools
+from pathlib import Path
+from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,7 +60,6 @@ def corpus_fingerprint(sf_dir: str, name: str) -> str:
     answers. At cluster scale the analog is the table snapshot/commit id.
     """
     import hashlib
-    from pathlib import Path
 
     p = Path(sf_dir.rstrip("/")).resolve() / f"{name}.parquet"
     try:
@@ -84,7 +85,6 @@ def snapshot_dir(root, sf_dir: str, name: str, version: str) -> str:
     """
     import hashlib
     import shutil
-    from pathlib import Path
 
     resolved = Path(sf_dir).resolve()
     prefix = (
@@ -101,6 +101,60 @@ def snapshot_dir(root, sf_dir: str, name: str, version: str) -> str:
     return str(root / key)
 
 
+# The snapshot rule for everything cached from a fixture table: a hit
+# needs the table's current ``corpus_fingerprint`` (path + size +
+# mtime), so a table regenerated at the same path is rebuilt, never
+# served stale. Spark frames (relations, the shared token grain) live
+# per session in ``_RELATION_CACHE``, session -> {(dir, name, what):
+# (fingerprint, frame)}, where a new snapshot replaces its entry; the
+# relation alone saves ``spark.read.parquet``'s ~0.1 s of listing and
+# footer-schema read per call, a metastore's job at lake scale. Footer
+# metadata is driver data, kept per process by ``_footers`` (keyed by
+# the fingerprint; stale entries age out of the bounded LRU).
+_RELATION_CACHE: "WeakKeyDictionary[SparkSession, dict]" = (
+    WeakKeyDictionary()
+)
+
+
+def session_frame(
+    spark: SparkSession, sf_dir: str, name: str, what: str, build
+) -> DataFrame:
+    """The frame ``build()`` derives from fixture table ``name``,
+    cached in ``spark``'s session under the snapshot rule above: one
+    entry per (table, ``what``), rebuilt when the table changes."""
+    per_session = _RELATION_CACHE.setdefault(spark, {})
+    key = (sf_dir.rstrip("/"), name, what)
+    fingerprint = corpus_fingerprint(sf_dir, name)
+    hit = per_session.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return hit[1]
+    frame = build()
+    per_session[key] = (fingerprint, frame)
+    return frame
+
+
+# Footer-metadata failures: no pyarrow, a missing or corrupt file
+# (ArrowInvalid is a ValueError), an absent or nested column.
+_METADATA_ERRORS = (ImportError, OSError, ValueError, KeyError)
+
+
+@functools.lru_cache(maxsize=256)
+def _footers(path: str, fingerprint: str) -> tuple:
+    """``FileMetaData`` of every parquet file of the table at ``path``
+    (one file or a directory of part files). ``fingerprint`` only keys
+    the cache; a failed read raises, so it is never cached."""
+    import pyarrow.parquet as pq
+
+    p = Path(path)
+    files = sorted(p.glob("*.parquet")) if p.is_dir() else [p]
+    return tuple(pq.ParquetFile(str(f)).metadata for f in files)
+
+
+def _table_footers(sf_dir: str, name: str) -> tuple:
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    return _footers(path, corpus_fingerprint(sf_dir, name))
+
+
 def table_rows(sf_dir: str, name: str) -> int:
     """Row count of one fixture table straight from the parquet footer
     — zero Spark jobs (the catalog-statistics read a warehouse serves
@@ -109,17 +163,9 @@ def table_rows(sf_dir: str, name: str) -> int:
     and must treat 0 as "assume small" so a failure never forces the
     scale path at test scale.
     """
-    from pathlib import Path
-
     try:
-        import pyarrow.parquet as pq
-
-        path = Path(sf_dir.rstrip("/")) / f"{name}.parquet"
-        files = (
-            sorted(path.glob("*.parquet")) if path.is_dir() else [path]
-        )
-        return sum(pq.ParquetFile(str(f)).metadata.num_rows for f in files)
-    except (ImportError, OSError, ValueError, KeyError) as exc:
+        return sum(md.num_rows for md in _table_footers(sf_dir, name))
+    except _METADATA_ERRORS as exc:
         # 0 = "assume small" keeps correctness but silently routes
         # scale-gated queries to the single-task plans; make the miss
         # observable (ADVICE r11) without changing the contract.
@@ -135,22 +181,6 @@ def table_rows(sf_dir: str, name: str) -> int:
         return 0
 
 
-# Per-session relation cache: spark.read.parquet costs ~0.1 s per call
-# (file listing + footer schema read through py4j), and a composite
-# query loads 2-7 tables — that metadata tax dominated the low end of
-# the per-query latency distribution. The cache plays the role a real
-# lakehouse catalog/metastore plays at 100 TB: resolve the table's
-# schema once, serve the immutable logical relation afterwards. Keyed
-# by the live SparkSession (WeakKeyDictionary: a stopped/collected
-# session drops its entries) and the corpus fingerprint (path + size +
-# mtime), so regenerated fixtures invalidate instead of serving stale.
-from weakref import WeakKeyDictionary
-
-_RELATION_CACHE: "WeakKeyDictionary[SparkSession, dict]" = (
-    WeakKeyDictionary()
-)
-
-
 def scan_width(sf_dir: str, name: str) -> int:
     """Effective scan parallelism of a fixture table: its total parquet
     row-group count. Parquet scan parallelism is capped by row groups,
@@ -158,36 +188,17 @@ def scan_width(sf_dir: str, name: str) -> int:
     over a 10-row-group file and leaves 22 of them empty, which is why
     a planned-partition count is a lying signal for the starvation
     gate below (hit round 9: the 64× orders file plans 32, delivers
-    10, and the md5 ladder ran ~3× slow). Metadata-only; cached per
-    corpus fingerprint."""
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    return _row_groups(path, corpus_fingerprint(sf_dir, name))
+    10, and the md5 ladder ran ~3× slow). Metadata-only.
 
-
-# One entry per (table file, snapshot): a table regenerated at the same
-# path adds an entry, so the cache is bounded by least-recent use.
-@functools.lru_cache(maxsize=256)
-def _row_groups(path: str, fingerprint: str) -> int:
-    """Row groups of the parquet file or directory at ``path``;
-    ``fingerprint`` only keys the cache."""
-    from pathlib import Path
-
-    p = Path(path)
-    # Metadata failures (missing pyarrow, unreadable footer, odd
-    # layout) return 0 = "unknown" rather than a pessimistic 1: a
-    # fake width-1 would silently turn the starvation gate into an
-    # unconditional repartition(cores) shuffle. widen_if_starved
-    # treats 0 as unknown and falls back to the planned-partition
-    # signal. ArrowInvalid subclasses ValueError, so (OSError,
-    # ValueError) covers corrupt/truncated footers.
+    A metadata failure returns 0 = "unknown" rather than a pessimistic
+    1: a fake width-1 would silently turn the starvation gate into an
+    unconditional repartition(cores) shuffle. widen_if_starved treats 0
+    as unknown and falls back to the planned-partition signal."""
     try:
-        import pyarrow.parquet as pq
-
-        files = p.glob("*.parquet") if p.is_dir() else [p]
-        n = sum(pq.ParquetFile(str(f)).metadata.num_row_groups for f in files)
-        return max(n, 1)
-    except (ImportError, OSError, ValueError):
+        n = sum(md.num_row_groups for md in _table_footers(sf_dir, name))
+    except _METADATA_ERRORS:
         return 0
+    return max(n, 1)
 
 
 def column_minmax(sf_dir: str, name: str, col: str):
@@ -203,29 +214,19 @@ def column_minmax(sf_dir: str, name: str, col: str):
     Correct at any scale: folds min-of-mins / max-of-maxes across every
     row group of every file, no data read.
     """
-    from pathlib import Path
-
+    lo = hi = None
     try:
-        import pyarrow.parquet as pq
-
-        path = Path(sf_dir.rstrip("/")) / f"{name}.parquet"
-        files = (
-            sorted(path.glob("*.parquet")) if path.is_dir() else [path]
-        )
-        lo = hi = None
-        for f in files:
-            pf = pq.ParquetFile(str(f))
-            i = pf.schema_arrow.get_field_index(col)
-            md = pf.metadata
+        for md in _table_footers(sf_dir, name):
+            i = [c.path for c in md.schema].index(col)
             for g in range(md.num_row_groups):
                 st = md.row_group(g).column(i).statistics
                 if st is None or not st.has_min_max:
                     return None
                 lo = st.min if lo is None else min(lo, st.min)
                 hi = st.max if hi is None else max(hi, st.max)
-        return None if lo is None else (lo, hi)
-    except (ImportError, OSError, ValueError, KeyError):
+    except _METADATA_ERRORS:
         return None
+    return None if lo is None else (lo, hi)
 
 
 def widen_if_starved(
@@ -279,18 +280,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` comes back as a proper microsecond TIMESTAMP_NTZ; all
     other tables are returned exactly as stored.
     """
-    per_session = _RELATION_CACHE.setdefault(spark, {})
-    key = (sf_dir.rstrip("/"), name, corpus_fingerprint(sf_dir, name))
-    hit = per_session.get(key)
-    if hit is not None:
-        return hit
-    configure_session(spark)
-    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
-    df = spark.read.parquet(path)
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
-        df = _events_from_nanos(df)
-    per_session[key] = df
-    return df
+
+    def build() -> DataFrame:
+        configure_session(spark)
+        df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
+        if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+            df = _events_from_nanos(df)
+        return df
+
+    return session_frame(spark, sf_dir, name, "relation", build)
 
 
 def local_frame(spark: SparkSession, rows, schema) -> DataFrame:

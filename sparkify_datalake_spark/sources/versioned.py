@@ -5,8 +5,8 @@ immutable, commits are atomic manifest swaps).
 
 Layout under the table root::
 
-    data/v00000/part-*.parquet     immutable data files, one dir/commit
-    _manifests/v00000.json         ordered file list + commit metadata
+    data/v00000/<token>/part-*.parquet  immutable, one dir per attempt
+    _manifests/v00000.json              ordered file list + metadata
 
 A reader resolves a *version* to its manifest and scans exactly the
 files it lists — uncommitted/orphaned data directories are invisible,
@@ -18,7 +18,9 @@ Commit protocol (single filesystem): write data files → write manifest
 to a temp name → ``os.link`` to the final version path. The hard link
 FAILS if the version already exists, which makes the claim atomic —
 two concurrent writers racing to commit version N cannot both succeed
-(optimistic concurrency, the loser retries on the next version). On an
+(optimistic concurrency, the loser retries on the next version). Each
+attempt writes into its own ``data/vNNNNN/<token>`` dir, so a loser
+never touches the files of the writer that won its version. On an
 object store the link step becomes a conditional put (if-none-match) —
 same protocol, different primitive.
 
@@ -71,7 +73,7 @@ def _write_data_files(df: DataFrame, data_dir: str) -> None:
     old = conf.get(key, None)
     conf.set(key, "TIMESTAMP_MICROS")
     try:
-        df.write.mode("overwrite").parquet(data_dir)
+        df.write.parquet(data_dir)
     finally:
         if old is None:
             conf.unset(key)
@@ -208,7 +210,7 @@ def _commit_frame(df: DataFrame, path: str, mode: str, meta: dict) -> int:
                 f"{sorted(missing)} type-changed={sorted(changed)} — "
                 "use mode='overwrite' to rewrite the schema"
             )
-    data_rel = f"data/v{version:05d}"
+    data_rel = f"data/v{version:05d}/{os.urandom(4).hex()}"
     data_dir = os.path.join(path, data_rel)
     _write_data_files(df, data_dir)
     new_files = [f"{data_rel}/{f}" for f in _list_parquet_files(data_dir)]
@@ -360,7 +362,9 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
     """Delete data dirs referenced by NO manifest in the kept horizon
     (the newest `keep_versions` manifests plus nothing else — older
     manifests become unreadable, as after Delta VACUUM). Returns the
-    deleted dirs. Never touches the manifest log itself."""
+    deleted ``data/vNNNNN`` dirs. A lost race's attempt dir inside a
+    live version dir goes with that dir. Never touches the manifest log
+    itself."""
     import shutil
 
     last = latest_version(path)
@@ -368,7 +372,7 @@ def vacuum(path: str, keep_versions: int = 1) -> list[str]:
         return []
     keep = range(max(0, last - keep_versions + 1), last + 1)
     live = {
-        os.path.dirname(f)
+        "/".join(f.split("/")[:2])  # data/vNNNNN
         for v in keep
         for f in _read_manifest(path, v)["files"]
     }

@@ -229,34 +229,6 @@ def test_pair_overlap_kernel_under_two_rows_is_empty(spark):
             assert out.collect() == []
 
 
-def test_tf_grain_follows_rewritten_documents(spark, sf_dir, tmp_path):
-    """The shared token grain is keyed by the documents snapshot: a
-    documents.parquet rewritten at the same path (half the rows) must
-    rebuild the grain, not serve the old one."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from sparkify_datalake_spark.operators.corpus_grain import (
-        whitespace_tf_grain,
-    )
-
-    docs = pq.read_table(f"{sf_dir}/documents.parquet")
-    path = str(tmp_path / "documents.parquet")
-    pq.write_table(docs, path)
-
-    def n_docs():
-        return (
-            whitespace_tf_grain(spark, str(tmp_path))
-            .agg(F.countDistinct("doc_id"))
-            .first()[0]
-        )
-
-    full = n_docs()
-    assert full == docs.num_rows
-    pq.write_table(docs.slice(0, docs.num_rows // 2), path)
-    assert n_docs() == docs.num_rows // 2
-
-
 def test_simhash_kernel_matches_explode_formula(spark, sf_dir):
     """dedup_simhash's Arrow popcount kernel must reproduce the
     original explode-by-64 signature definition exactly: bit b is set

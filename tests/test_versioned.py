@@ -43,7 +43,8 @@ def test_uncommitted_data_dir_is_invisible(spark, tmp_path):
     _df(spark, 900, 903).write.parquet(os.path.join(t, "data/v00001"))
     assert _ids(spark, t) == [0, 1, 2]
     assert V.latest_version(t) == 0
-    # and the next commit claims version 1 anyway (overwrites the orphan)
+    # and the next commit claims version 1 anyway (in its own attempt
+    # dir beside the orphan's files, which stay unlisted)
     V.commit(_df(spark, 3, 5), t)
     assert _ids(spark, t) == [0, 1, 2, 3, 4]
 
@@ -56,6 +57,27 @@ def test_version_claim_is_atomic(spark, tmp_path):
     V._commit(t, 1, racer)
     with pytest.raises(V.VersionConflict):
         V._commit(t, 1, racer)
+
+
+def test_losing_writer_keeps_the_winners_files(spark, tmp_path, monkeypatch):
+    """A writer that loses the claim for version N must not delete the
+    data files of the writer that committed N first: each attempt
+    writes into its own dir under data/vNNNNN."""
+    t = str(tmp_path / "tbl")
+    V.commit(_df(spark, 0, 3), t)
+    write, raced = V._write_data_files, []
+
+    def racing_write(df, data_dir):
+        if not raced:  # another writer commits version 1 meanwhile
+            raced.append(data_dir)
+            V.commit(_df(spark, 10, 12), t)
+        write(df, data_dir)
+
+    monkeypatch.setattr(V, "_write_data_files", racing_write)
+    with pytest.raises(V.VersionConflict):
+        V.commit(_df(spark, 3, 5), t)
+    assert V.latest_version(t) == 1
+    assert _ids(spark, t, 1) == [0, 1, 2, 10, 11]
 
 
 def test_restore_rolls_forward(spark, tmp_path):
