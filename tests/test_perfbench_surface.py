@@ -13,6 +13,7 @@ from weakref import WeakKeyDictionary
 
 from sparkify_datalake_spark.sources import versioned as V
 
+# by module path: ``sources.load`` is shadowed by the re-exported function
 load_mod = importlib.import_module("sparkify_datalake_spark.sources.load")
 
 
